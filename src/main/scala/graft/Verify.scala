@@ -28,13 +28,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val selected = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
       // several queries cache intermediates (t19 eval shingles, t29
       // features, v4 shingle rows); without this the pins accumulate
@@ -43,6 +44,17 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
+    // a run that observed no pass must not exit 0: a throwing query or a
+    // filter that selected nothing both read as failures
+    if (selected.isEmpty) {
+      System.err.println(s"[verify] FAILED: the filter ${args(2)} selected no query")
+      sys.exit(1)
+    }
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED ${failed.size}/${selected.size}: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+    println(s"[verify] ok ${selected.size}/${selected.size}")
   }
 
   /** The oracle map rendered as the JSON document the driver's json.load

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.sources.Tables
+import graft.stores.WarehouseStore
 
 /** IVF (inverted-file) approximate nearest neighbor — the indexed scale
   * path for similarity search (v1 brute force is the correctness baseline;
@@ -135,6 +136,10 @@ object IvfAnn {
     cents
   }
 
+  /** Code version of the `graft_ivf_cents_` store (see
+    * [[WarehouseStore.Key]]). */
+  private[graft] val centStoreVersion = 1
+
   /** PERSISTED centroid store — the IVF fit as a content-keyed warehouse
     * artifact (the minhash-signature / kNN-graph store discipline applied
     * to the one provably serial stage of every IVF consumer: each Lloyd
@@ -146,9 +151,9 @@ object IvfAnn {
     * (id-seeded, no RNG), so stored == fresh bits (IvfCentStoreSpec pins
     * elementwise equality) and every consumer's declared output hash is
     * unchanged — the driver's CORRECTNESS rows certify exactly that.
-    * Key = content fingerprint of the source fixture + featurization tag
-    * + nLists (a regenerated corpus MISSES rather than serving a stale
-    * fit); publish is the atomic temp+rename of [[TextOps.storedOrBuilt]].
+    * Key = snapshot of the source fixture, featurization tag and nLists
+    * (a regenerated corpus MISSES rather than serving a stale fit);
+    * publish is [[WarehouseStore.storedOrBuilt]]'s atomic temp+rename.
     * v21_kmeans_fit deliberately keeps the FRESH fit: it is the declared
     * training-stage certificate (its output hash-checks every assignment
     * against the unrolled-Lloyd oracle each round), so the cold fit path
@@ -161,12 +166,9 @@ object IvfAnn {
       nLists: Int
   )(fit: => DataFrame): Array[(Int, Seq[Float])] =
     collectCents(
-      TextOps.storedOrBuilt(
+      WarehouseStore.storedOrBuilt(
         s,
-        "graft_ivf_cents_" +
-          TextOps.md5Hex(s"ivf-cents-v1|$tag|$nLists|$snapshot").take(16),
-        builder = "ivf-centroids",
-        source = snapshot
+        WarehouseStore.Key("ivf_cents", centStoreVersion, snapshot, Seq(tag, nLists.toString))
       )(fit)
     )
 
@@ -180,7 +182,7 @@ object IvfAnn {
   ): Array[(Int, Seq[Float])] =
     storedCentroids(
       s,
-      TextOps.fixtureSnapshot(d, "embeddings.parquet"),
+      WarehouseStore.fixtureSnapshot(d, "embeddings.parquet"),
       "emb",
       nLists
     )(centroids(Tables.embeddings(s, d), nLists))

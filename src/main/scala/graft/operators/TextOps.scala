@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
 import graft.sources.Tables
+import graft.stores.WarehouseStore
 
 /** Text-analysis / dedup operators for a training-data pipeline, over the
   * driver's `documents` table. All distributed (explode + shuffle on content
@@ -1949,50 +1950,10 @@ object TextOps {
     scala.collection.concurrent.TrieMap
       .empty[(String, Int), Seq[(Int, String, String, Long, Long)]]
 
-  /** Cheap fingerprint of `d/documents.parquet` (file or directory):
-    * sorted name:size:mtime lines. Listing a fixture dir is O(files) —
-    * microseconds next to the training jobs it guards. */
+  /** [[WarehouseStore.fixtureSnapshot]] of `d/documents.parquet` — the
+    * content identity behind the documents-fed stores and memos. */
   private[graft] def documentsSnapshot(d: String): String =
-    fixtureSnapshot(d, "documents.parquet")
-
-  /** The fixture fingerprint behind every cross-session store key
-    * (suffix ranks/grams, minhash signatures, the kNN graph, BPE token
-    * counts). Default mode is name:size:mtime — O(files) listing, the
-    * right cost next to the builds it guards — whose ONE documented
-    * aliasing hazard is an in-place rewrite that preserves each file's
-    * size AND mtime (a `cp -p`'d fixture). Deployments that can't rule
-    * that out opt into CONTENT hashing with
-    * `-Dgraft.store.contentHash=true` (round-12 finding #2 / round-13
-    * note #3): the key becomes the md5 of every file's bytes, immune to
-    * metadata aliasing at the price of one full read of the fixture per
-    * key derivation — still cheap next to a store build, but no longer
-    * free, which is why it is the opt-in and not the default. The two
-    * modes produce disjoint key spaces (`content:` marker), so flipping
-    * the flag invalidates — never aliases — existing stores. */
-  private[graft] def fixtureSnapshot(d: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val files = walk(new java.io.File(d, table))
-    if (java.lang.Boolean.getBoolean("graft.store.contentHash")) {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      files.foreach { f =>
-        md.update(s"${f.getName}|".getBytes("UTF-8"))
-        val in = new java.io.FileInputStream(f)
-        try {
-          val buf = new Array[Byte](1 << 16)
-          var n = in.read(buf)
-          while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-      }
-      s"$d|$table|content:" +
-        md.digest().map(b => f"${b & 0xff}%02x").mkString
-    } else
-      files
-        .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-        .mkString(s"$d|", "|", "")
-  }
+    WarehouseStore.fixtureSnapshot(d, "documents.parquet")
 
   private[graft] def bpeTrainLedger(
       s: SparkSession,
@@ -2327,12 +2288,11 @@ object TextOps {
   /** Per-document TOKENIZER-token counts under the trained merge list,
     * served through the persisted `graft_bpe_tokens_*` store — the
     * encode-once-per-ingest artifact every token-grain budget consumes
-    * (round-13 verdict ask #1). Key = md5(format version | corpus
-    * snapshot | the full merge list), so retraining the tokenizer OR
+    * (round-13 verdict ask #1). The key holds the corpus snapshot and
+    * the full merge list as params, so retraining the tokenizer OR
     * regenerating the corpus each mint a fresh store instead of
-    * silently serving counts from the wrong (corpus, vocabulary) pair;
-    * publish rides [[storedOrBuilt]]'s atomic rename with `bpe-tokens`
-    * provenance. Build = t64's native encode (one corpus scan inside
+    * silently serving counts from the wrong (corpus, vocabulary) pair.
+    * Build = t64's native encode (one corpus scan inside
     * WholeStageCodegen, per-word cost independent of merge count)
     * collapsed to doc grain; at 100 TB this is exactly the "tokenize
     * the corpus once, bill everything downstream in its units" pass,
@@ -2341,15 +2301,18 @@ object TextOps {
   private[graft] def bpeTokenCounts(s: SparkSession, d: String): DataFrame =
     bpeTokenCountsFor(s, d, bpeMergeStrings(s, d))
 
+  /** Code version of the `graft_bpe_tokens_` store (see
+    * [[WarehouseStore.Key]]). */
+  private[graft] val bpeTokensStoreVersion = 1
+
   /** [[bpeTokenCounts]] under an ARBITRARY merge list (NUL-joined wire
     * shape) — the production entry: BpeScale publishes the store at its
     * 10k-merge vocabulary through this, so the declared N=3 query and
     * the production config share one build/key/publish path. */
   def bpeTokenCountsFor(s: SparkSession, d: String, merges: Seq[String]): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val snap = documentsSnapshot(d)
-    val key = md5Hex((s"bpe-tokens-v1|$snap" +: merges).mkString("|"))
-    storedOrBuilt(s, s"graft_bpe_tokens_$key", builder = "bpe-tokens", source = snap) {
+    val key = WarehouseStore.Key("bpe_tokens", bpeTokensStoreVersion, documentsSnapshot(d), merges)
+    WarehouseStore.storedOrBuilt(s, key) {
       Tables
         .documents(s, d)
         .select(col("doc_id"), explode(toks).as("w"))
@@ -2895,6 +2858,10 @@ object TextOps {
       )
       .select(col("doc_id"), col("b.band"), col("b.bkey"))
 
+  /** Code version of the `graft_minhash_sigs_` store (see
+    * [[WarehouseStore.Key]]). */
+  private[graft] val minhashStoreVersion = 1
+
   /** PERSISTED signature store for the t41 family — the batch-side
     * analogue of the streaming probe's persisted index
     * ([[graft.streaming.StreamingMinhashDedup]] already reads stored
@@ -2903,7 +2870,7 @@ object TextOps {
     * re-paid the same corpus-wide 8-min agg per run — the family's
     * ~2-3 s fixed stage cost at sf0.1. The store computes the signature
     * agg ONCE per (corpus, session lineage), persists it as a warehouse
-    * table keyed by the corpus path, and every consumer reads 8 longs ×
+    * table keyed by the corpus snapshot, and every consumer reads 8 longs ×
     * n_docs of parquet instead of re-aggregating shingle grain. At
     * production this is the ingest-time signature table the index is
     * built from; values are exact integers, so stored vs recomputed
@@ -2912,43 +2879,15 @@ object TextOps {
     * POSTINGS (O(shingles) per doc) are deliberately NOT stored —
     * constant-bytes-per-doc is the contract that keeps a 100 TB corpus's
     * index in fast storage. */
-  private[graft] def minhashSigStore(s: SparkSession, d: String): DataFrame = {
-    // key = corpus path + a physical fingerprint of its parquet files
-    // (name, length, mtime): the warehouse outlives the session, and a
-    // corpus regenerated in place (testdata drifts between rounds) must
-    // MISS rather than serve signatures of the old bytes. Stale tables
-    // for dead fingerprints are inert — rebuild cost is one signature
-    // agg, the thing the store amortizes anyway.
-    val dir = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stamp = fs
-      .listStatus(dir)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted
-      .mkString("|")
-    val key = java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(s"$d|$stamp".getBytes("UTF-8"))
-      .take(6)
-      .map(b => f"${b & 0xff}%02x")
-      .mkString
-    // path-based, not saveAsTable: the warehouse DIRECTORY outlives the
-    // in-memory catalog, so a fresh session would see tableExists=false
-    // yet fail the rebuild on the surviving location. A parquet path +
-    // _SUCCESS completeness marker is session-independent: complete dir
-    // → read it (same fingerprint = same bytes); absent or torn dir →
-    // (re)write with overwrite.
-    val store = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_minhash_sigs_$key"
-    )
-    // atomic temp+rename publish (round 13): the original
-    // check-then-overwrite had the same two-JVM race the suffix store
-    // was flagged for — storedOrBuilt closes it for every family
-    storedOrBuilt(s, store.getName, builder = "minhash-sigs", source = documentsSnapshot(d)) {
+  private[graft] def minhashSigStore(s: SparkSession, d: String): DataFrame =
+    // keyed on the corpus snapshot: the warehouse outlives the session,
+    // and a corpus regenerated in place (testdata drifts between rounds)
+    // must MISS rather than serve signatures of the old bytes
+    WarehouseStore.storedOrBuilt(
+      s,
+      WarehouseStore.Key("minhash_sigs", minhashStoreVersion, documentsSnapshot(d), Nil)) {
       sigsFromKeyed(minhashKeyed(Tables.documents(s, d)))
     }
-  }
 
   /** Per-(band, bkey) bucket cap for t41's candidate joins — the same
     * df-cap discipline as t4/t5/m4: a degenerate bucket shared by K docs
@@ -4100,280 +4039,31 @@ object TextOps {
     * session after reads parquet. Sits between the in-session memo and
     * the build: memo hit → zero I/O; store hit → one parquet read (no
     * doubling rounds, no checkpoints, no window state); miss → build +
-    * atomic publish + read. The key is the FULL md5 of
-    * (format version, content tag, spanL) — the first cut truncated to
-    * 48 bits, where two different corpus snapshots birthday-colliding
-    * would silently serve the wrong rank table; the full digest costs
-    * nothing (round-12 verdict finding #1). The content tag is the
-    * fixture's name:size:mtime snapshot, with the same
-    * regenerated-in-place MISS semantics as the signature store — an
-    * in-place rewrite that preserves every file's size AND mtime (a
-    * copied-back fixture with `cp -p`) aliases to the old table; that
-    * is standard cache-key practice, stated here per round-12 finding
-    * #2 (hash file CONTENTS into the tag if a deployment can't rule it
-    * out). Stale dirs for dead fingerprints are inert until
-    * [[suffixStorePurge]] collects them. Rank-id VALUES are
-    * build-relative (orderIds rides the exchange's partitioning), but
-    * consumers use only id equality and a stored table is
-    * self-consistent by construction. */
+    * atomic publish + read. The key's snapshot is the content tag (the
+    * fixture's snapshot, suffixed by any derivation), with the same
+    * regenerated-in-place MISS semantics as the signature store. Stale
+    * dirs for dead fingerprints are inert until [[WarehouseStore.purge]]
+    * collects them. Rank-id VALUES are build-relative (orderIds rides
+    * the exchange's partitioning), but consumers use only id equality
+    * and a stored table is self-consistent by construction. */
   private def suffixRankStore(
       s: SparkSession,
       words: DataFrame,
       cacheTag: String,
       spanL: Int
   ): DataFrame =
-    storedOrBuilt(
+    WarehouseStore.storedOrBuilt(
       s,
-      s"graft_suffix_ranks_${suffixStoreKey(cacheTag, spanL)}",
-      builder = "suffix-ranks",
-      source = cacheTag) {
+      WarehouseStore.Key("suffix_ranks", suffixStoreVersion, cacheTag, Seq(spanL.toString))) {
       buildSuffixRankTable(words, spanL)
     }
 
-  /** Format-version salt folded into every persisted suffix-family store
-    * key: bump it whenever the stored table's OUTPUT CONTRACT changes
-    * (schema, rank-tag semantics — the round-12 bit-48 → bit-59 move is
-    * exactly the class of change that would otherwise silently serve
-    * stale cross-session stores built by old code; round-12 advice #4).
-    * v2 = bit-59 round tags + full-md5 keys. */
-  private[graft] val suffixStoreVersion = "v2"
-
-  private[graft] def md5Hex(text: String): String =
-    java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(text.getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x")
-      .mkString
-
-  private[graft] def suffixStoreKey(cacheTag: String, spanL: Int): String =
-    md5Hex(s"$suffixStoreVersion|$cacheTag|$spanL")
-
-  /** Name of the provenance sidecar [[storedOrBuilt]] publishes with
-    * every store. Underscore-prefixed on purpose: Spark's parquet reader
-    * ignores `_`/`.`-prefixed files (the _SUCCESS convention), so the
-    * sidecar rides inside the store dir without touching readback. */
-  private[graft] val storeMetaFile = "_meta.json"
-
-  /** Read-or-build with ATOMIC publish for the suffix-family warehouse
-    * stores. The first cut's check-then-overwrite raced: two JVMs (Bench
-    * vs Verify locally; a second ingest racing an hours-long cluster
-    * build) could both see no `_SUCCESS` and interleave writes under the
-    * SAME path, handing concurrent readers a torn store (round-12 advice
-    * #5). Here the build lands in a dot-prefixed temp dir and a directory
-    * RENAME publishes it, so readers only ever observe a complete store;
-    * the losing racer's temp is deleted (if the winner's store is
-    * complete) or promoted (if the winner tore). Directory rename is
-    * atomic on HDFS and local filesystems; an object-store deployment
-    * without atomic rename wants a lock file here instead. */
-  private[graft] def storedOrBuilt(
-      s: SparkSession,
-      dirName: String,
-      builder: String = "",
-      source: String = ""
-  )(
-      build: => DataFrame
-  ): DataFrame = {
-    val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val store = new org.apache.hadoop.fs.Path(warehouse, dirName)
-    val fs = store.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def complete =
-      fs.exists(new org.apache.hadoop.fs.Path(store, "_SUCCESS"))
-    if (!complete) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        warehouse,
-        s".${dirName}_tmp_${java.util.UUID.randomUUID}"
-      )
-      build.write.mode("overwrite").parquet(tmp.toString)
-      // provenance rides INSIDE the temp dir so the rename publishes
-      // data and metadata atomically together (round-13 verdict ask #4):
-      // created-at drives the TTL purge, builder names which ingest
-      // verb produced the store, source carries the md5 of the fixture
-      // fingerprint the key was derived from — enough to adjudicate a
-      // dead key without re-deriving every live key. Builder is a plain
-      // token and source an md5, so the JSON needs no escaping.
-      val metaJson =
-        s"""{"name":"$dirName","created_at_ms":${System.currentTimeMillis},""" +
-          s""""builder":"$builder","source_md5":"${md5Hex(source)}"}"""
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, storeMetaFile), true)
-      try out.write(metaJson.getBytes("UTF-8"))
-      finally out.close()
-      // rename is guarded by an existence check: Hadoop's local-FS
-      // rename onto an EXISTING directory moves the source INSIDE it
-      // (POSIX mv semantics) instead of refusing — publish() refuses
-      // explicitly so a pre-existing destination is adjudicated below.
-      // The check-then-rename still has a window (a racer can publish
-      // between the two calls and our rename lands INSIDE their store),
-      // so publish() post-verifies: a nested dot-dir means we lost the
-      // race — remove it from the winner's store and report failure
-      // (round-13 review finding #3). tmpAlive tracks whether our temp
-      // still exists to delete.
-      var tmpAlive = true
-      def publish(): Boolean =
-        if (fs.exists(store) || !fs.rename(tmp, store)) false
-        else {
-          val nested = new org.apache.hadoop.fs.Path(store, tmp.getName)
-          if (fs.exists(nested)) {
-            fs.delete(nested, true); tmpAlive = false; false
-          } else { tmpAlive = false; true }
-        }
-      if (!publish()) {
-        // a concurrent builder won — use theirs if complete, replace a
-        // torn one, and never leave the temp behind either way (the
-        // torn-winner-plus-lost-temp double race falls through to the
-        // loud require below)
-        if (complete) { if (tmpAlive) fs.delete(tmp, true) }
-        else if (tmpAlive) {
-          fs.delete(store, true)
-          if (!publish() && tmpAlive) fs.delete(tmp, true)
-        }
-      }
-      require(
-        complete,
-        s"suffix store $store is incomplete after build+publish — " +
-          "a concurrent writer tore it; remove the directory and rerun"
-      )
-    }
-    s.read.parquet(store.toString)
-  }
-
-  /** Store-lifecycle verbs — VectorIndexStore's delete/purge discipline
-    * applied to the suffix family (round-12 verdict ask #4): without
-    * them, one warehouse dir per (format version, corpus content, spanL)
-    * accumulates FOREVER — every testdata regeneration or code-version
-    * bump strands the previous store. `suffixStoreList` inventories the
-    * family's dirs (name, bytes); `suffixStorePurge` deletes all of them
-    * except `keep` (matched on full dir name) and returns what it
-    * removed. Covers both the rank-table stores and t72's gram-index
-    * stores (same `graft_suffix_` prefix); in-flight temp dirs are
-    * dot-prefixed and matched too — a crashed builder's temp is exactly
-    * the garbage this verb exists for. */
-  def suffixStoreList(s: SparkSession): Seq[(String, Long)] =
-    warehouseStoreList(s, "graft_suffix_")
-
-  def suffixStorePurge(s: SparkSession, keep: Set[String] = Set.empty): Seq[String] =
-    warehouseStorePurge(s, keep, "graft_suffix_")
-
-  /** The same verbs over EVERY persisted graft store family (suffix
-    * ranks + gram indexes, minhash signatures, the kNN graph) — the
-    * default prefix sweeps them all; pass a narrower prefix to scope. */
-  def warehouseStoreList(
-      s: SparkSession,
-      prefix: String = "graft_"
-  ): Seq[(String, Long)] = {
-    val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(warehouse)) Seq.empty
-    else
-      fs.listStatus(warehouse)
-        .toSeq
-        .filter(st => st.getPath.getName.stripPrefix(".").startsWith(prefix))
-        .map(st =>
-          (st.getPath.getName, fs.getContentSummary(st.getPath).getLength))
-        .sortBy(_._1)
-  }
-
-  def warehouseStorePurge(
-      s: SparkSession,
-      keep: Set[String] = Set.empty,
-      prefix: String = "graft_"
-  ): Seq[String] = {
-    val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // only stores that actually deleted are reported removed — a failed
-    // delete (permissions, concurrent handle) silently claimed as swept
-    // would leave stale gigabytes the caller believes are gone
-    // (round-13 review finding #8). Caveat, documented: a dot-prefixed
-    // temp belonging to a LIVE concurrent builder matches the prefix
-    // and purging it fails that build — run purge when no builds are in
-    // flight (the store key makes the failed builder's rerun cheap and
-    // correct either way).
-    warehouseStoreList(s, prefix)
-      .map(_._1)
-      .filterNot(keep)
-      .filter(name => fs.delete(new org.apache.hadoop.fs.Path(warehouse, name), true))
-  }
-
-  /** One store's provenance row: bytes from the namespace listing,
-    * created-at / builder / source-md5 from the `_meta.json` sidecar
-    * when present. Stores published before the sidecar existed (and
-    * crashed builders' dot-temps, whose meta may or may not have been
-    * written yet) report None — [[warehouseStorePurgeOlderThan]] ages
-    * those by directory mtime instead. */
-  final case class StoreMeta(
-      name: String,
-      bytes: Long,
-      createdAtMs: Option[Long],
-      builder: Option[String],
-      sourceMd5: Option[String]
-  )
-
-  /** [[warehouseStoreList]] with each store's provenance sidecar read
-    * back (round-13 verdict ask #4: (name, bytes) alone could not tell
-    * a dead key from a live one without re-deriving every live key).
-    * The sidecar is our own fixed-shape JSON, so a regex pull per field
-    * reads it without a JSON library on the driver path. */
-  def warehouseStoreMeta(
-      s: SparkSession,
-      prefix: String = "graft_"
-  ): Seq[StoreMeta] = {
-    val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def field(json: String, key: String): Option[String] =
-      s""""$key":"?([^",}]*)"?""".r.findFirstMatchIn(json).map(_.group(1))
-    warehouseStoreList(s, prefix).map { case (name, bytes) =>
-      val metaPath =
-        new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(warehouse, name), storeMetaFile)
-      val json =
-        if (!fs.exists(metaPath)) None
-        else {
-          val in = fs.open(metaPath)
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            val arr = new Array[Byte](4096)
-            var n = in.read(arr)
-            while (n >= 0) { bos.write(arr, 0, n); n = in.read(arr) }
-            Some(new String(bos.toByteArray, "UTF-8"))
-          } finally in.close()
-        }
-      StoreMeta(
-        name,
-        bytes,
-        json.flatMap(field(_, "created_at_ms")).flatMap(_.toLongOption),
-        json.flatMap(field(_, "builder")).filter(_.nonEmpty),
-        json.flatMap(field(_, "source_md5")).filter(_.nonEmpty)
-      )
-    }
-  }
-
-  /** TTL purge — the executable form of the rebuild schedule SCALING.md
-    * documents (round-13 verdict ask #4: the schedule was prose; this
-    * verb runs it). Deletes every store in the prefix namespace older
-    * than `olderThanMs` — age from the `_meta.json` created-at when
-    * present, else the directory's own mtime (pre-sidecar stores and
-    * crashed builders' dot-temp orphans both age this way) — except
-    * names in `keep`. Same honesty contract as [[warehouseStorePurge]]:
-    * only stores that actually deleted are reported, and a LIVE
-    * builder's dot-temp matches the prefix — run with no builds in
-    * flight, or keep the TTL above the longest build. `nowMs` is a
-    * parameter so specs pin the clock. */
-  def warehouseStorePurgeOlderThan(
-      s: SparkSession,
-      olderThanMs: Long,
-      keep: Set[String] = Set.empty,
-      prefix: String = "graft_",
-      nowMs: Long = System.currentTimeMillis
-  ): Seq[String] = {
-    val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ages = warehouseStoreMeta(s, prefix).map { m =>
-      val p = new org.apache.hadoop.fs.Path(warehouse, m.name)
-      m.name -> m.createdAtMs.getOrElse(fs.getFileStatus(p).getModificationTime)
-    }
-    ages
-      .collect { case (name, born) if nowMs - born > olderThanMs => name }
-      .filterNot(keep)
-      .filter(name => fs.delete(new org.apache.hadoop.fs.Path(warehouse, name), true))
-  }
+  /** Code version of the suffix-family stores (`graft_suffix_ranks_` and
+    * `graft_suffix_grams_`, see [[WarehouseStore.Key]]). v2 = bit-59
+    * round tags: the round-12 bit-48 → bit-59 move is exactly the class
+    * of change that would otherwise silently serve stale cross-session
+    * stores built by old code. */
+  private[graft] val suffixStoreVersion = 2
 
   private def buildSuffixRankTable(
       words: DataFrame,
@@ -4925,19 +4615,17 @@ object TextOps {
     * that bounded projection, never in an exchange, and the index is one
     * 16-byte md5 + one count per DISTINCT window (constant bytes per
     * window, the affordable-at-100 TB shape; n_occ rides along so a probe
-    * can also say "already duplicated in base"). Same storedOrBuilt
-    * atomic-publish + version-salt + purge lifecycle as the rank store. */
+    * can also say "already duplicated in base"). Same
+    * [[WarehouseStore]] lifecycle and version as the rank store. */
   private[graft] def suffixGramIndexOn(
       s: SparkSession,
       words: DataFrame,
       cacheTag: String,
       L: Int
   ): DataFrame =
-    storedOrBuilt(
+    WarehouseStore.storedOrBuilt(
       s,
-      s"graft_suffix_grams_${suffixStoreKey(cacheTag + "|grams", L)}",
-      builder = "suffix-grams",
-      source = cacheTag) {
+      WarehouseStore.Key("suffix_grams", suffixStoreVersion, cacheTag, Seq(L.toString))) {
       val rt = suffixRankTableOn(s, words, cacheTag, L)
       val reps = rt
         .filter(col("pos") + (L - 1) <= col("n_tokens"))

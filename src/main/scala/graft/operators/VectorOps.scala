@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{F, GraftFunctions}
 import graft.sources.Tables
+import graft.stores.WarehouseStore
 
 /** Similarity search + hash-based near-dup operators over the `embeddings`
   * and `documents` tables.
@@ -1313,32 +1314,25 @@ object VectorOps {
   def ivfListsFor(n: Long, targetListSize: Int = 256): Int =
     math.min(4096L, math.max(IvfAnn.k.toLong, n / targetListSize)).toInt
 
+  /** Code version of the `graft_knn_graph_` store (see
+    * [[WarehouseStore.Key]]). */
+  private[graft] val knnGraphStoreVersion = 1
+
   /** Cross-session PERSISTED kNN graph — the third index family to get
     * the warehouse-store treatment (minhash signatures, suffix ranks,
     * now the graph): at corpus scale the graph build is the expensive
     * all-nodes probe while its consumers (v17's report, v22's PageRank,
     * v38's serving walk) are cheap reads, so one ingest pays the build
-    * and every session after reads parquet. Keyed by the full md5 of
-    * (format version, embeddings content stamp, nLists); published
-    * atomically and collected by [[graft.operators.TextOps.warehouseStorePurge]]
-    * — the [[graft.operators.TextOps.storedOrBuilt]] lifecycle verbatim.
+    * and every session after reads parquet. Keyed by the embeddings
+    * snapshot and nLists through [[WarehouseStore.storedOrBuilt]].
     * The graph rows are deterministic (cosine ranks with id
     * tie-breaks), so a stored graph is bit-equal to a rebuilt one and
     * every consumer's oracle stays green either way. */
   private[graft] def knnGraphFor(s: SparkSession, d: String, nLists: Int): DataFrame = {
-    // the fixture fingerprint is the ONE existing helper — a forked
-    // inline copy would silently diverge the cache-key discipline the
-    // day the fingerprint changes (round-13 review finding #5)
-    val key = java.security.MessageDigest
-      .getInstance("MD5")
-      .digest(s"knn-v1|${embeddingsSnapshot(d)}|$nLists".getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x")
-      .mkString
-    TextOps.storedOrBuilt(
+    val snapshot = WarehouseStore.fixtureSnapshot(d, "embeddings.parquet")
+    WarehouseStore.storedOrBuilt(
       s,
-      s"graft_knn_graph_$key",
-      builder = "knn-graph",
-      source = embeddingsSnapshot(d)) {
+      WarehouseStore.Key("knn_graph", knnGraphStoreVersion, snapshot, Seq(nLists.toString))) {
       // the graph build reads the SAME persisted fit its probe-side
       // consumers use — one Lloyd fit per (corpus content, nLists)
       // however the stores warm up
@@ -2492,16 +2486,6 @@ object VectorOps {
     scala.collection.concurrent.TrieMap
       .empty[String, Seq[(Int, Array[Long], Long, Array[Double])]]
 
-  /** Content fingerprint of `d/embeddings.parquet` — the bpeLedgerCache
-    * key discipline: a regenerated fixture dir yields fresh training,
-    * never silently stale weights. */
-  // one snapshot implementation for every store family: default
-  // name:size:mtime keys (bit-identical to the pre-round-14 ones, so no
-  // store invalidation) with TextOps.fixtureSnapshot's documented
-  // -Dgraft.store.contentHash=true opt-in
-  private def embeddingsSnapshot(d: String): String =
-    TextOps.fixtureSnapshot(d, "embeddings.parquet")
-
   /** The v35 trainer loop: K batch-GD iterations, each ONE slim-scan
     * aggregation collecting a single (F+2)-column row; the weight vector
     * is driver state like t62's merge picks. Memoized per fixture
@@ -2513,7 +2497,7 @@ object VectorOps {
       d: String
   ): Seq[(Int, Array[Long], Long, Array[Double])] =
     logregCache.getOrElseUpdate(
-      embeddingsSnapshot(d), {
+      WarehouseStore.fixtureSnapshot(d, "embeddings.parquet"), {
         val feats = logregFeatureFrame(s, d).cache()
         try {
           var w = Array.fill(logregP)(0.0)

@@ -172,9 +172,9 @@ object BpeScale {
           .bpeTokenCountsFor(spark.newSession(), sfDir, loaded.toSeq)
           .agg(sum("n_bpe_tokens")).collect()
         val tRead = (System.nanoTime() - t5) / 1e9
-        val bytes = graft.operators.TextOps
-          .warehouseStoreMeta(spark, "graft_bpe_tokens_")
-          .map(_.bytes).sum
+        val bytes = graft.stores.WarehouseStore
+          .list(spark, "graft_bpe_tokens_")
+          .map(_._2).sum
         s""","store_docs":$nDocs,"store_build_sec":${f"$tStore%.1f"},""" +
           s""""store_read_sec":${f"$tRead%.1f"},"store_bytes":$bytes"""
       }

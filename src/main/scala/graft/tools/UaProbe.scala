@@ -8,8 +8,7 @@ import graft.useractivity.UserActivity
   * action (noop sink, guide §1.4) plus the full assembly, several reps in
   * one session — the round-15 profiling pass the r14 verdict asked for
   * (finding #1: the flagship was never profiled below whole-query grain).
-  * Also A/Bs the smp-cache variant INTERLEAVED in one session so box
-  * drift cancels. Usage: runMain graft.tools.UaProbe [reps] [armsToo]
+  * Usage: runMain graft.tools.UaProbe [reps] [arms]
   */
 object UaProbe {
   def main(args: Array[String]): Unit = {
@@ -24,14 +23,16 @@ object UaProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def time(name: String)(df: => DataFrame): Unit = {
+    def time(name: String)(df: => DataFrame): Double = {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
-      println(f"UA $name%-22s ${(System.nanoTime - t0) / 1e9}%7.3f s")
+      val dt = (System.nanoTime - t0) / 1e9
+      println(f"UA $name%-22s $dt%7.3f s")
       spark.catalog.clearCache()
+      dt
     }
     val cfg = UserActivity.Config(countries = UserActivityFull.uaCountries)
-    val acc = scala.collection.mutable.Map[String, List[Double]]()
+    val full = scala.collection.mutable.ArrayBuffer[Double]()
     for (r <- 1 to reps) {
       println(s"--- rep $r")
       if (armsToo) {
@@ -58,24 +59,12 @@ object UaProbe {
         )
         time("hasAddon")(UserActivity.hasAddon(UserActivity.sampleAddons(smp)))
       }
-      for (cache <- Seq(false, true)) {
-        spark.conf.set("spark.graft.ua.mwLocal", cache.toString)
-        spark.conf.set("spark.graft.ua.cacheSample", "false")
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries("ua_full_pipeline")(spark, d).count()
-        val dt = (System.nanoTime - t0) / 1e9
-        val key = s"full_count cache=$cache"
-        println(f"UA $key%-22s $dt%7.3f s")
-        acc(key) = acc.getOrElse(key, Nil) :+ dt
-        spark.catalog.clearCache()
-      }
+      full += time("full_pipeline")(graft.SparkEntry.queries("ua_full_pipeline")(spark, d))
     }
-    acc.toSeq.sortBy(_._1).foreach { case (k, vs) =>
-      println(
-        f"UA SUMMARY $k min=${vs.min}%.3f med=${vs.sorted.apply(vs.size / 2)}%.3f " +
-          vs.map(v => f"$v%.2f").mkString("[", ",", "]")
-      )
-    }
+    println(
+      f"UA SUMMARY full_pipeline min=${full.min}%.3f med=${full.sorted.apply(full.size / 2)}%.3f " +
+        full.map(v => f"$v%.2f").mkString("[", ",", "]")
+    )
     spark.stop()
   }
 }

@@ -284,7 +284,13 @@ object UserActivity {
       )
 
   /** Final 8-way assembly + armagaddon-week exclusion
-    * (user_activity.sql:326-360). */
+    * (user_activity.sql:326-360).
+    *
+    * Not fully lazy: the `weeklyStats` arm is collected eagerly, at call
+    * time, into a local relation (see below). That arm therefore has
+    * snapshot semantics — it reflects the inputs as they were when
+    * `build` ran — while every other arm stays lazy and reads the inputs
+    * when the returned frame is executed. */
   def build(
       clientsLastSeen: DataFrame,
       countryNames: DataFrame,

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{IvfAnn, TextOps}
+import graft.operators.IvfAnn
 import graft.sources.Tables
+import graft.stores.WarehouseStore
 
 /** Store-parity gate for the persisted IVF centroid store (r14 verdict
   * ask #2): the stored fit must be BIT-IDENTICAL to a fresh fit — floats
@@ -32,7 +33,7 @@ class IvfCentStoreSpec extends AnyFunSuite {
   }
 
   test("store key separates nLists and featurization tags") {
-    val snap = TextOps.fixtureSnapshot(sf, "embeddings.parquet")
+    val snap = WarehouseStore.fixtureSnapshot(sf, "embeddings.parquet")
     val emb = Tables.embeddings(spark, sf)
     graft.functions.GraftFunctions.register(spark)
     val k8 = IvfAnn.storedCentroids(spark, snap, "emb", 8)(IvfAnn.centroids(emb, 8))
@@ -41,7 +42,7 @@ class IvfCentStoreSpec extends AnyFunSuite {
     // a distinct tag over the same fixture+nLists builds its own store
     // (the builder frame proves which store served the read)
     val tagged = IvfAnn.storedCentroids(spark, snap, "spec-tag", 8)(
-      IvfAnn.centroids(emb.limit(20), 8)
+      IvfAnn.centroids(emb.filter(col("vec_id") < 20), 8)
     )
     assert(tagged.map(_._1).toSeq != k8.map(_._1).toSeq ||
       tagged.map(_._2).toSeq != k8.map(_._2).toSeq,

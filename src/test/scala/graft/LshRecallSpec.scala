@@ -170,8 +170,7 @@ class LshRecallSpec extends AnyFunSuite {
     assert(second == first, "store-served graph diverged from the builder's")
     assert(stores().toSeq.sorted.map(sig) == fp,
       "new session REBUILT the graph store instead of reading it")
-    val removed = graft.operators.TextOps
-      .warehouseStorePurge(spark, prefix = "graft_knn_graph_")
+    val removed = graft.stores.WarehouseStore.purge(spark, prefix = "graft_knn_graph_")
     assert(removed.nonEmpty && stores().isEmpty, "purge missed the graph store")
   }
 

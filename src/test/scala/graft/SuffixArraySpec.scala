@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextOps
+import graft.stores.WarehouseStore
 
 /** Unit + differential coverage for the prefix-doubling suffix-rank
   * family (t65/t66) beyond the value-level oracle: hand-computed span
@@ -302,38 +303,31 @@ class SuffixArraySpec extends AnyFunSuite {
     assert(rows == Seq((1L, 0L, 0L, 0L, 0L)), s"unexpected ledger: $rows")
   }
 
-  test("store keys are full-digest and version-salted; purge removes and rebuild restores") {
-    // full 32-hex md5 (the 48-bit truncation could birthday-collide two
-    // corpus snapshots and silently serve the wrong table) and distinct
-    // across tag, span, AND format version
-    val k1 = TextOps.suffixStoreKey("tagA", 16)
-    assert(k1.length == 32 && k1.forall(c => c.isDigit || ('a' to 'f').contains(c)))
-    assert(k1 != TextOps.suffixStoreKey("tagB", 16))
-    assert(k1 != TextOps.suffixStoreKey("tagA", 50))
-
+  test("suffix store purge removes listed stores; rebuild restores") {
+    // the key format itself is pinned for every family in WarehouseStoreSpec
     val dir = writeDocs(Seq(
       0L -> ((1 to 20).map(i => s"x$i") ++ (1 to 20).map(i => s"y$i")).mkString(" "),
       1L -> ((1 to 20).map(i => s"y$i") ++ (1 to 4).map(i => s"w$i")).mkString(" ")
     ))
     val first = TextOps.queries("t65_suffix_ranks")(spark, dir)
       .collect().map(_.toSeq).toSeq
-    val listed = TextOps.suffixStoreList(spark).map(_._1)
+    val listed = WarehouseStore.list(spark, "graft_suffix_").map(_._1)
     assert(listed.exists(_.startsWith("graft_suffix_ranks_")),
       "lifecycle list missed the store the build just wrote")
-    assert(TextOps.suffixStoreList(spark).forall(_._2 > 0L), "store sizes not reported")
+    assert(WarehouseStore.list(spark, "graft_suffix_").forall(_._2 > 0L), "store sizes not reported")
     // purge everything, then a FRESH session (the memo would otherwise
     // mask the deletion) must rebuild and agree
-    val removed = TextOps.suffixStorePurge(spark)
+    val removed = WarehouseStore.purge(spark, prefix = "graft_suffix_")
     assert(removed.toSet == listed.toSet, "purge removed a different set than listed")
-    assert(TextOps.suffixStoreList(spark).isEmpty)
+    assert(WarehouseStore.list(spark, "graft_suffix_").isEmpty)
     val again = TextOps.queries("t65_suffix_ranks")(spark.newSession(), dir)
       .collect().map(_.toSeq).toSeq
     assert(again == first, "post-purge rebuild diverged")
     // keep-set is honored
-    val keepOne = TextOps.suffixStoreList(spark).map(_._1).take(1).toSet
-    val removed2 = TextOps.suffixStorePurge(spark, keep = keepOne)
+    val keepOne = WarehouseStore.list(spark, "graft_suffix_").map(_._1).take(1).toSet
+    val removed2 = WarehouseStore.purge(spark, keepOne, "graft_suffix_")
     assert(removed2.toSet.intersect(keepOne).isEmpty)
-    assert(TextOps.suffixStoreList(spark).map(_._1).toSet == keepOne)
+    assert(WarehouseStore.list(spark, "graft_suffix_").map(_._1).toSet == keepOne)
   }
 
   test("a torn store directory (no _SUCCESS) is rebuilt, not served") {
@@ -355,7 +349,7 @@ class SuffixArraySpec extends AnyFunSuite {
     val again = TextOps.queries("t65_suffix_ranks")(spark.newSession(), dir)
       .collect().map(_.toSeq).toSeq
     assert(again == expect, "torn store was served or rebuilt wrong")
-    TextOps.suffixStorePurge(spark)
+    WarehouseStore.purge(spark, prefix = "graft_suffix_")
   }
 
   test("orderIds ids stay below the 2^59 round-tag ceiling across many range partitions") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps
+import graft.stores.WarehouseStore
 
 /** The round-14 token-grain family (t74/t74b: budgets denominated in
   * trained-BPE tokens; t70b: document-boundary-respecting packing) and
@@ -33,11 +34,11 @@ class TokenGrainSpec extends AnyFunSuite {
 
   test("t74 rides a persisted graft_bpe_tokens store with provenance meta") {
     TextOps.queries("t74_bpe_token_shards")(spark, sf).count()
-    val metas = TextOps.warehouseStoreMeta(spark, "graft_bpe_tokens_")
+    val metas = WarehouseStore.meta(spark, "graft_bpe_tokens_")
     assert(metas.nonEmpty, "no bpe-tokens store published")
     val m = metas.head
     assert(m.bytes > 0L)
-    assert(m.builder.contains("bpe-tokens"), s"builder meta wrong: ${m.builder}")
+    assert(m.builder.contains("bpe_tokens"), s"builder meta wrong: ${m.builder}")
     assert(m.sourceMd5.exists(_.length == 32), s"source meta wrong: ${m.sourceMd5}")
     val age = System.currentTimeMillis - m.createdAtMs.getOrElse(0L)
     assert(age >= 0L && age < 24L * 3600 * 1000, s"created-at implausible: ${m.createdAtMs}")
@@ -187,7 +188,7 @@ class TokenGrainSpec extends AnyFunSuite {
     // a crashed builder's dot-temp: no meta — ages by directory mtime
     val orphan = mk(".graft_fakefam_tmp_orphan", None)
     orphan.setLastModified(now - 10 * day)
-    val removed = TextOps.warehouseStorePurgeOlderThan(
+    val removed = WarehouseStore.purgeOlderThan(
       spark,
       olderThanMs = 5 * day,
       keep = Set("graft_fakefam_keep"),
@@ -197,9 +198,9 @@ class TokenGrainSpec extends AnyFunSuite {
     assert(
       removed.toSet == Set("graft_fakefam_dead", ".graft_fakefam_tmp_orphan"),
       s"purged wrong set: $removed")
-    val left = TextOps.warehouseStoreList(spark, "graft_fakefam_").map(_._1).toSet
+    val left = WarehouseStore.list(spark, "graft_fakefam_").map(_._1).toSet
     assert(left == Set("graft_fakefam_keep", "graft_fakefam_young"), s"survivors wrong: $left")
     // cleanup so reruns in one JVM start fresh
-    TextOps.warehouseStorePurge(spark, prefix = "graft_fakefam_")
+    WarehouseStore.purge(spark, prefix = "graft_fakefam_")
   }
 }

@@ -160,28 +160,32 @@ object Main {
     }
   }
 
-  /** Weekly batch loop (hardware_report.py:416-470): runWeek per window,
-    * idempotent partitioned write, readback, flatten, JSON export. */
+  /** The reference's weekly batches (hardware_report.py:416-470) in one
+    * pass: every window from `date_from` back `past_weeks` weeks is
+    * checked for data, aggregated and collapsed together
+    * ([[HardwareReport.aggregateWeeks]]), and written by one partitioned
+    * write; then readback, flatten, JSON export. An empty window fails
+    * the job before any partition is written. */
   def hardwareReport(spark: SparkSession, opts: Map[String, String]): Unit = {
     // dynamic partition overwrite = the reference's `table$YYYYMMDD` +
     // WRITE_TRUNCATE idempotent weekly upsert (hardware_report.py:459-465):
-    // re-running a week replaces only that week's partition.
+    // the one write replaces exactly the weeks it carries.
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val input = spark.read.parquet(opts("input"))
     val out = opts("output")
     val weeks = opts.getOrElse("past_weeks", "0").toInt
     val dateFrom = java.time.LocalDate.parse(opts("date_from"))
     val deviceMap = DeviceMap.toLookup(DeviceMap.load(spark))
-    (0 to weeks).foreach { w =>
-      val from = java.sql.Date.valueOf(dateFrom.minusWeeks(w.toLong))
-      val to = java.sql.Date.valueOf(dateFrom.minusWeeks(w.toLong).plusDays(7))
-      HardwareReport
-        .runWeek(input, deviceMap, from, to)
-        .write
-        .mode("overwrite")
-        .partitionBy("date_from")
-        .parquet(s"$out/hardware_aggregates")
+    val windows = (0 to weeks).map { w =>
+      val from = dateFrom.minusWeeks(w.toLong)
+      (java.sql.Date.valueOf(from), java.sql.Date.valueOf(from.plusDays(7)))
     }
+    HardwareReport
+      .aggregateWeeks(input, deviceMap, windows)
+      .write
+      .mode("overwrite")
+      .partitionBy("date_from")
+      .parquet(s"$out/hardware_aggregates")
     val readback = spark.read.parquet(s"$out/hardware_aggregates").orderBy("date_from")
     val flat = HardwareReport.flatten(readback).collect()
     val byDate = flat

@@ -592,334 +592,83 @@ case class ProjectPlanes(child: Expression, nDims: Int)
 
 /** Registration for the native functions — either per-session at runtime
   * ([[GraftFunctions.register]]) or via `spark.sql.extensions=
-  * graft.functions.GraftExtensions` for cluster-wide injection.
+  * graft.functions.GraftExtensions` for cluster-wide injection. Both read
+  * the one table below.
   */
 object GraftFunctions {
-  val dotInfo = new ExpressionInfo(
-    classOf[DotProductFloat].getName,
-    "graft_dot"
-  )
+  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 
-  val quantizeInfo = new ExpressionInfo(
-    classOf[QuantizeInt8].getName,
-    "graft_quantize_int8"
-  )
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
 
-  val dist2Info = new ExpressionInfo(
-    classOf[DistanceSquaredFloat].getName,
-    "graft_dist2"
-  )
-
-  val bandHashesInfo = new ExpressionInfo(
-    classOf[BandHashesFloat].getName,
-    "graft_band_hashes"
-  )
-
-  val byteEmbedInfo = new ExpressionInfo(
-    classOf[ByteEmbed].getName,
-    "graft_byte_embed"
-  )
-
-  val shinglesInfo = new ExpressionInfo(
-    classOf[ShingleHashes].getName,
-    "graft_shingles"
-  )
-
-  val winnowInfo = new ExpressionInfo(
-    classOf[WinnowFingerprints].getName,
-    "graft_winnow"
-  )
-
-  val gramEmbedInfo = new ExpressionInfo(
-    classOf[GramEmbed].getName,
-    "graft_gram_embed"
-  )
-
-  val pqEncodeInfo = new ExpressionInfo(
-    classOf[PqEncode].getName,
-    "graft_pq_encode"
-  )
-
-  val pqAdcInfo = new ExpressionInfo(
-    classOf[PqAdcDistance].getName,
-    "graft_pq_adc"
-  )
-
-  val bloomInfo = new ExpressionInfo(
-    classOf[BloomMightContainLong].getName,
-    "graft_bloom_might_contain"
-  )
-
-  val mmrInfo = new ExpressionInfo(
-    classOf[MmrSelect].getName,
-    "graft_mmr"
-  )
-
-  val signPackInfo = new ExpressionInfo(
-    classOf[SignPack].getName,
-    "graft_sign_pack"
-  )
-
-  val bitmapAndCountInfo = new ExpressionInfo(
-    classOf[BitmapAndCount].getName,
-    "graft_bitmap_and_count"
-  )
-
-  val projectInfo = new ExpressionInfo(
-    classOf[ProjectPlanes].getName,
-    "graft_project"
-  )
-
-  val bpeEncodeInfo = new ExpressionInfo(
-    classOf[GraftBpeEncode].getName,
-    "graft_bpe_encode"
-  )
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_pack",
-      (exprs: Seq[Expression]) =>
-        SignPack(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (exprs: Seq[Expression]) => DotProductFloat(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantize_int8",
-      (exprs: Seq[Expression]) => QuantizeInt8(exprs(0)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dist2",
-      (exprs: Seq[Expression]) => DistanceSquaredFloat(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_band_hashes",
-      // geometry args must be literals — they size the plane table at
-      // plan time (matching how the DuckDB oracles bake their literals)
-      (exprs: Seq[Expression]) =>
-        BandHashesFloat(
-          exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue(),
-          if (exprs.length > 3) exprs(3).eval().asInstanceOf[Number].intValue()
-          else 64
-        ),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_byte_embed",
-      (exprs: Seq[Expression]) => ByteEmbed(exprs(0)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      (exprs: Seq[Expression]) => {
+  /** Every graft function: name, implementing class, builder. */
+  val builders: Seq[(String, Class[_], FunctionBuilder)] = Seq(
+    ("graft_sign_pack", classOf[SignPack],
+      exprs => SignPack(exprs(0), intArg(exprs(1)))),
+    ("graft_dot", classOf[DotProductFloat],
+      exprs => DotProductFloat(exprs(0), exprs(1))),
+    ("graft_quantize_int8", classOf[QuantizeInt8],
+      exprs => QuantizeInt8(exprs(0))),
+    ("graft_dist2", classOf[DistanceSquaredFloat],
+      exprs => DistanceSquaredFloat(exprs(0), exprs(1))),
+    // geometry args must be literals — they size the plane table at plan
+    // time (matching how the DuckDB oracles bake their literals)
+    ("graft_band_hashes", classOf[BandHashesFloat],
+      exprs => BandHashesFloat(
+        exprs(0), intArg(exprs(1)), intArg(exprs(2)),
+        if (exprs.length > 3) intArg(exprs(3)) else 64)),
+    ("graft_byte_embed", classOf[ByteEmbed],
+      exprs => ByteEmbed(exprs(0))),
+    ("graft_shingles", classOf[ShingleHashes],
+      exprs => {
         require(exprs.length == 1, s"graft_shingles takes 1 argument (got ${exprs.length}); the 3-gram width is fixed — extra args were previously IGNORED silently")
         ShingleHashes(exprs(0), 3)
-      },
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow",
-      (exprs: Seq[Expression]) => {
+      }),
+    ("graft_winnow", classOf[WinnowFingerprints],
+      exprs => {
         require(exprs.length == 1, s"graft_winnow takes 1 argument (got ${exprs.length}); the (3,4) geometry is fixed — extra args were previously IGNORED silently")
         WinnowFingerprints(exprs(0), 3, 4)
-      },
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_embed",
-      (exprs: Seq[Expression]) => GramEmbed.fromArgs(exprs),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode",
-      (exprs: Seq[Expression]) => PqEncode(exprs(0), exprs(1), exprs(2)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_adc",
-      (exprs: Seq[Expression]) => PqAdcDistance(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      (exprs: Seq[Expression]) => BloomMightContainLong(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mmr",
-      (exprs: Seq[Expression]) => {
+      }),
+    ("graft_gram_embed", classOf[GramEmbed],
+      exprs => GramEmbed.fromArgs(exprs)),
+    ("graft_pq_encode", classOf[PqEncode],
+      exprs => PqEncode(exprs(0), exprs(1), exprs(2))),
+    ("graft_pq_adc", classOf[PqAdcDistance],
+      exprs => PqAdcDistance(exprs(0), exprs(1), exprs(2), exprs(3))),
+    ("graft_bloom_might_contain", classOf[BloomMightContainLong],
+      exprs => BloomMightContainLong(exprs(0), exprs(1))),
+    ("graft_mmr", classOf[MmrSelect],
+      exprs => {
         require(exprs.length == 1, s"graft_mmr takes 1 argument (got ${exprs.length}); (k=8, lambda=0.7) are fixed — extra args were previously IGNORED silently")
         MmrSelect(exprs(0), 8, 0.7)
-      },
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitmap_and_count",
-      (exprs: Seq[Expression]) => {
+      }),
+    ("graft_bitmap_and_count", classOf[BitmapAndCount],
+      exprs => {
         require(exprs.length == 2, s"graft_bitmap_and_count takes 2 arguments (got ${exprs.length})")
         BitmapAndCount(exprs(0), exprs(1))
-      },
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_project",
-      // nDims must be a literal — it sizes the plane table at plan time
-      (exprs: Seq[Expression]) =>
-        ProjectPlanes(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_encode",
-      GraftBpeEncode.build _,
-      "built-in"
-    )
+      }),
+    // nDims must be a literal — it sizes the plane table at plan time
+    ("graft_project", classOf[ProjectPlanes],
+      exprs => ProjectPlanes(exprs(0), intArg(exprs(1)))),
+    ("graft_bpe_encode", classOf[GraftBpeEncode],
+      exprs => GraftBpeEncode.build(exprs))
+  )
+
+  /** Registers every graft function in the session's own registry, once:
+    * every query calls this, and re-registering a name logs "replaced a
+    * previously registered function" at WARN each time. The check is per
+    * registry, so a new session (its own registry) still registers. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!builders.forall { case (name, _, _) => registry.functionExists(FunctionIdentifier(name)) })
+      builders.foreach { case (name, _, builder) =>
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
   }
 }
 
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_sign_pack"),
-        GraftFunctions.signPackInfo,
-        (exprs: Seq[Expression]) =>
-          SignPack(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_dot"),
-        GraftFunctions.dotInfo,
-        (exprs: Seq[Expression]) => DotProductFloat(exprs(0), exprs(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_quantize_int8"),
-        GraftFunctions.quantizeInfo,
-        (exprs: Seq[Expression]) => QuantizeInt8(exprs(0))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_dist2"),
-        GraftFunctions.dist2Info,
-        (exprs: Seq[Expression]) => DistanceSquaredFloat(exprs(0), exprs(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_band_hashes"),
-        GraftFunctions.bandHashesInfo,
-        (exprs: Seq[Expression]) =>
-          BandHashesFloat(
-            exprs(0),
-            exprs(1).eval().asInstanceOf[Number].intValue(),
-            exprs(2).eval().asInstanceOf[Number].intValue(),
-            if (exprs.length > 3) exprs(3).eval().asInstanceOf[Number].intValue()
-            else 64
-          )
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_byte_embed"),
-        GraftFunctions.byteEmbedInfo,
-        (exprs: Seq[Expression]) => ByteEmbed(exprs(0))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_shingles"),
-        GraftFunctions.shinglesInfo,
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 1, s"graft_shingles takes 1 argument (got ${exprs.length})")
-          ShingleHashes(exprs(0), 3)
-        }
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_winnow"),
-        GraftFunctions.winnowInfo,
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 1, s"graft_winnow takes 1 argument (got ${exprs.length})")
-          WinnowFingerprints(exprs(0), 3, 4)
-        }
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_gram_embed"),
-        GraftFunctions.gramEmbedInfo,
-        (exprs: Seq[Expression]) => GramEmbed.fromArgs(exprs)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_pq_encode"),
-        GraftFunctions.pqEncodeInfo,
-        (exprs: Seq[Expression]) => PqEncode(exprs(0), exprs(1), exprs(2))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_pq_adc"),
-        GraftFunctions.pqAdcInfo,
-        (exprs: Seq[Expression]) => PqAdcDistance(exprs(0), exprs(1), exprs(2), exprs(3))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_bloom_might_contain"),
-        GraftFunctions.bloomInfo,
-        (exprs: Seq[Expression]) => BloomMightContainLong(exprs(0), exprs(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_mmr"),
-        GraftFunctions.mmrInfo,
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 1, s"graft_mmr takes 1 argument (got ${exprs.length})")
-          MmrSelect(exprs(0), 8, 0.7)
-        }
-      )
-    )
-    ext.injectFunction(
-      (
-        // round-10 review: this was registered per-session but never
-        // injected — a cluster configured via spark.sql.extensions alone
-        // failed EventOps' bitmap queries with "Undefined function"
-        FunctionIdentifier("graft_bitmap_and_count"),
-        GraftFunctions.bitmapAndCountInfo,
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 2, s"graft_bitmap_and_count takes 2 arguments (got ${exprs.length})")
-          BitmapAndCount(exprs(0), exprs(1))
-        }
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_project"),
-        GraftFunctions.projectInfo,
-        (exprs: Seq[Expression]) =>
-          ProjectPlanes(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("graft_bpe_encode"),
-        GraftFunctions.bpeEncodeInfo,
-        (exprs: Seq[Expression]) => GraftBpeEncode.build(exprs)
-      )
-    )
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.builders.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -1,6 +1,6 @@
 package graft.hardware
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.F
 
@@ -19,6 +19,9 @@ import graft.functions.F
   *     single scan — the property the reference got from array subqueries);
   *   - the 1%-threshold two-pass "Other" collapse (A11) is two groupBy
   *     rounds, not a driver loop — it scales to any key cardinality;
+  *   - the weekly batches (hardware_report.py:416-470) are not a loop:
+  *     the week is a grouping column, so every requested window shares
+  *     one sample-count job and one aggregate/collapse pass, written once;
   *   - output is long format (dimension, key, client_count, ratio), the
   *     shape that partitions/export cleanly; the JSON export pivots at the
   *     very end on collected (tiny) results.
@@ -62,9 +65,61 @@ object HardwareReport {
       )
   }
 
+  /** The columns that name a weekly window; every per-week grouping
+    * carries both, so all requested weeks share one pass. */
+  val windowCols: Seq[String] = Seq("date_from", "date_to")
+
+  /** All weekly windows in one pass: the reference runs one query and one
+    * `table$YYYYMMDD` load per weekly batch (hardware_report.py:416-470);
+    * here the week is a grouping column.
+    *
+    *   - one job sums `client_count` per window, and every window must hold
+    *     data before anything is written — the reference fails LOUDLY on an
+    *     empty week (load_data raises ValueError, hardware_report.py:80-83);
+    *     proceeding would exit 0 having written nothing for the week and
+    *     re-exported stale JSON as if fresh (a typo'd --date_from, or an
+    *     input table that hasn't landed yet);
+    *   - each week's threshold is the driver's `int(total * 0.01)` (:442),
+    *     carried with its sample count in a broadcast local relation;
+    *   - aggregate, decode and collapse then run once over every window.
+    *
+    * The caller writes the result once with `partitionBy("date_from")` +
+    * dynamic partition overwrite — the Spark equivalent of the weekly
+    * `table$YYYYMMDD` WRITE_TRUNCATE upsert (hardware_report.py:459-465).
+    */
+  def aggregateWeeks(
+      input: DataFrame,
+      deviceMap: Map[String, (String, String)],
+      windows: Seq[(java.sql.Date, java.sql.Date)]
+  ): DataFrame = {
+    require(windows.nonEmpty, "no weekly window requested")
+    val inWindows = input.filter(
+      windows
+        .map { case (from, to) => col("date_from") === lit(from) && col("date_to") === lit(to) }
+        .reduce(_ || _)
+    )
+    val counted = inWindows
+      .groupBy(windowCols.map(col): _*)
+      .agg(coalesce(sum("client_count"), lit(0L)))
+      .collect()
+      .map(r => (r.getDate(0).toLocalDate, r.getDate(1).toLocalDate) -> r.getLong(2))
+      .toMap
+    val totals = windows.map { case (from, to) =>
+      val n = counted.getOrElse((from.toLocalDate, to.toLocalDate), 0L)
+      require(n > 0L, s"No data in input for $from to $to")
+      (from, to, n, (n * 0.01).toLong)
+    }
+    collapseBuckets(
+      aggregateDimensions(inWindows, deviceMap),
+      input.sparkSession.createDataFrame(totals).toDF(windowCols ++ Seq("sample_count", "threshold"): _*)
+    )
+  }
+
   /** One-pass multi-dimension aggregation (A3): decode dimensions as
-    * columns, GROUPING SETS over the 11 singleton sets, un-pivot via
-    * grouping_id into long format (dimension, key, client_count).
+    * columns, GROUPING SETS over the 11 singleton sets — each led by the
+    * window columns, so every week aggregates in the same pass — and
+    * un-pivot via grouping_id into long format (dimension, key,
+    * client_count, date_from, date_to).
     * One scan; `Expand` multiplies rows 11x before the partial aggregate —
     * at 100 TB the input here is already the per-combo pre-aggregate
     * (as in the reference), so the expansion is over combos, not clients.
@@ -75,15 +130,20 @@ object HardwareReport {
   ): DataFrame = {
     val dims = dimensionKeys(deviceMap)
     val decoded = input.select(
-      dims.map { case (n, c) => c.as(s"k_$n") } :+ col("client_count"): _*
+      windowCols.map(col) ++ dims.map { case (n, c) => c.as(s"k_$n") } :+ col("client_count"): _*
     )
     val spark = input.sparkSession
     decoded.createOrReplaceTempView("graft_hw_decoded")
-    val setList = dims.map { case (n, _) => s"(k_$n)" }.mkString(", ")
+    val window = windowCols.mkString(", ")
+    val setList = dims.map { case (n, _) => s"($window, k_$n)" }.mkString(", ")
     val gid = dims.zipWithIndex
       .map { case ((n, _), i) =>
         // grouping_id bit for column i is (1 << (n-1-i)) when EXCLUDED;
         // the singleton set for dim i has all bits set except its own.
+        // The window columns lead every set, so they take the high bits
+        // and are never excluded: the codes are the dims-only ones.
+        // (grouping_id takes no argument list: Spark rejects one that
+        // names only the dimension columns, GROUPING_ID_COLUMN_MISMATCH.)
         val g = (0 until dims.size).filter(_ != i).map(j => 1L << (dims.size - 1 - j)).sum
         s"WHEN $g THEN '$n'"
       }
@@ -93,7 +153,7 @@ object HardwareReport {
       .mkString(" ")
     spark.sql(s"""
       WITH g AS (
-        SELECT ${dims.map { case (n, _) => s"k_$n" }.mkString(", ")},
+        SELECT $window, ${dims.map { case (n, _) => s"k_$n" }.mkString(", ")},
                grouping_id() AS gid,
                sum(client_count) AS client_count
         FROM graft_hw_decoded
@@ -106,32 +166,34 @@ object HardwareReport {
              -- it would concat-propagate to a null flat_key at export
              -- and NPE the JSON writer after all weeks computed.
              coalesce(CASE $keyExpr END, 'None') AS key,
-             client_count
+             client_count,
+             $window
       FROM (SELECT *, CASE gid $gid END AS dimension FROM g)
     """)
   }
 
   /** Faithful 2-pass threshold collapse + ratio normalization
-    * (`collapse_buckets`, hardware_report.py:278-324):
+    * (`collapse_buckets`, hardware_report.py:278-324), per week:
     *   - `resolution` key "0x0" always folds into Other;
-    *   - keys under `countThreshold` fold to Other — except the
+    *   - keys under the week's `threshold` fold to Other — except the
     *     uncollapsed dims (has_flash, os_arch), and `os` first folds to
     *     "<osname>-Other" and only in a second pass to global Other;
-    *   - every count is normalized by `sampleCount`.
-    * Expressed as two groupBy rounds over the long format.
+    *   - every count is normalized by the week's `sample_count`.
+    * `totals` holds one (date_from, date_to, sample_count, threshold) row
+    * per week; it is tiny and broadcast. Expressed as two groupBy rounds
+    * over the long format, each keyed by the week as well.
     */
-  def collapseBuckets(
-      longDf: DataFrame,
-      countThreshold: Long,
-      sampleCount: Long
-  ): DataFrame = {
+  def collapseBuckets(longDf: DataFrame, totals: DataFrame): DataFrame = {
     val uncollapsed = Seq("has_flash", "os_arch")
+    val week = (windowCols ++ Seq("sample_count", "threshold")).map(col)
+    val threshold = col("threshold")
     val pass1 = longDf
+      .join(broadcast(totals), windowCols)
       .withColumn(
         "key1",
         when(col("dimension") === "resolution" && col("key") === "0x0", lit("Other"))
           .when(
-            col("client_count") < countThreshold &&
+            col("client_count") < threshold &&
               !col("dimension").isin(uncollapsed: _*),
             when(
               col("dimension") === "os",
@@ -140,55 +202,26 @@ object HardwareReport {
           )
           .otherwise(col("key"))
       )
-      .groupBy("dimension", "key1")
+      .groupBy(week ++ Seq(col("dimension"), col("key1")): _*)
       .agg(sum("client_count").as("client_count"))
     val pass2 = pass1
       .withColumn(
         "key2",
         when(
-          col("dimension") === "os" && col("client_count") < countThreshold,
+          col("dimension") === "os" && col("client_count") < threshold,
           lit("Other")
         ).otherwise(col("key1"))
       )
-      .groupBy(col("dimension"), col("key2").as("key"))
+      .groupBy(week ++ Seq(col("dimension"), col("key2").as("key")): _*)
       .agg(sum("client_count").as("client_count"))
-    pass2.withColumn("ratio", col("client_count") / lit(sampleCount.toDouble))
-  }
-
-  /** Full weekly run (the body of the reference's per-batch loop,
-    * hardware_report.py:427-456): filter the week, aggregate + decode +
-    * collapse, stamp dates. The caller writes the result with
-    * `partitionBy("date_from")` + dynamic partition overwrite — the Spark
-    * equivalent of the `table$YYYYMMDD` WRITE_TRUNCATE idempotent weekly
-    * upsert (hardware_report.py:459-465).
-    */
-  def runWeek(
-      input: DataFrame,
-      deviceMap: Map[String, (String, String)],
-      dateFrom: java.sql.Date,
-      dateTo: java.sql.Date
-  ): DataFrame = {
-    val week = input.filter(
-      col("date_from") === lit(dateFrom) && col("date_to") === lit(dateTo)
+    pass2.select(
+      Seq(
+        col("dimension"),
+        col("key"),
+        col("client_count"),
+        (col("client_count") / col("sample_count")).as("ratio")
+      ) ++ windowCols.map(col): _*
     )
-    val sampleCount = week
-      .agg(coalesce(sum("client_count"), lit(0L)))
-      .head()
-      .getLong(0)
-    // the reference fails LOUDLY on an empty week (load_data raises
-    // ValueError when client_count is NULL, hardware_report.py:80-83) —
-    // proceeding would exit 0 having written nothing for the week and
-    // re-exported stale JSON as if fresh (a typo'd --date_from, or an
-    // input table that hasn't landed yet)
-    require(
-      sampleCount > 0L,
-      s"No data in input for $dateFrom to $dateTo"
-    )
-    val threshold = (sampleCount * 0.01).toLong // int(total * 0.01), :442
-    val longDf = aggregateDimensions(week, deviceMap)
-    collapseBuckets(longDf, threshold, sampleCount)
-      .withColumn("date_from", lit(dateFrom))
-      .withColumn("date_to", lit(dateTo))
   }
 
   /** Long -> wide flatten for export (`flatten_aggregates`,

@@ -193,6 +193,7 @@ object Multimodal {
 
 /** Declared-query wiring for the multimodal surface. */
 object MultimodalOps {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** m4 — chunk-fingerprint media dedup: the backup/rsync-style binary
     * near-duplicate detector. Each payload splits into fixed 64-byte
@@ -579,6 +580,14 @@ object MultimodalOps {
         val byVolume = (nVecs * nBands + budget - 1) / budget
         val minForDisk = (nVecs * nBands + diskSafe - 1) / diskSafe
         val capped = Seq(16L, nBands.toLong, byVolume).min
+        // one band per group is the finest split: past it, a group's
+        // signature rows (= nVecs) exceed the disk-safe bound regardless
+        if (minForDisk > nBands)
+          log.warn(
+            s"m7e: $nVecs vectors need $minForDisk band groups to stay under " +
+              s"$diskSafe signature rows per group, but there are only $nBands bands; " +
+              s"clamped to $nBands groups of $nVecs rows each"
+          )
         math.max(1L, math.min(nBands.toLong, math.max(capped, minForDisk))).toInt
       }
     val out = scratch.getOrElse(

@@ -75,6 +75,61 @@ class CliSpec extends AnyFunSuite {
     assert(json.contains("\"osName_Windows_NT-10.0\""))
   }
 
+  /** One hardware combo of 950 clients in each week starting on a date
+    * of `weekStarts`. */
+  private def hardwareInput(path: String, weekStarts: Seq[String]): Unit =
+    weekStarts.map { d =>
+      (d, "Windows_NT-10.0", "x86-64", 8, "GenuineIntel", "3.6", "1920x1080", 16,
+        false, false, "0x10de", "0x13c1", 950L)
+    }.toDF(
+      "date_from_s", "os", "browser_arch", "cpu_cores", "cpu_vendor",
+      "cpu_speed", "resolution", "memory_gb", "has_flash", "is_wow64",
+      "gfx0_vendor_id", "gfx0_device_id", "client_count"
+    ).withColumn("date_from", org.apache.spark.sql.functions.to_date($"date_from_s"))
+      .withColumn("date_to", org.apache.spark.sql.functions.date_add($"date_from", 7))
+      .drop("date_from_s")
+      .write.mode("overwrite").parquet(path)
+
+  test("hardware_report: an empty week fails the job before any write") {
+    val tmp = Files.createTempDirectory("graft-hw-empty").toString
+    hardwareInput(s"$tmp/input", Seq("2020-01-20", "2020-01-06"))
+    val e = intercept[IllegalArgumentException] {
+      Main.hardwareReport(spark, Map(
+        "input" -> s"$tmp/input", "date_from" -> "2020-01-20",
+        "past_weeks" -> "2", "output" -> s"$tmp/out"))
+    }
+    assert(e.getMessage.contains("No data in input for 2020-01-13 to 2020-01-20"))
+    assert(!Files.exists(java.nio.file.Path.of(s"$tmp/out/hardware_aggregates")))
+  }
+
+  test("hardware_report runs as many SQL executions for four weeks as for one") {
+    // the weeks share one pass; a per-week loop would add executions per week
+    val tmp = Files.createTempDirectory("graft-hw-execs").toString
+    hardwareInput(s"$tmp/input", Seq("2020-01-27", "2020-01-20", "2020-01-13", "2020-01-06"))
+    def executions(pastWeeks: Int): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          n.incrementAndGet()
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        Main.hardwareReport(spark, Map(
+          "input" -> s"$tmp/input", "date_from" -> "2020-01-27",
+          "past_weeks" -> pastWeeks.toString, "output" -> s"$tmp/out$pastWeeks"))
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      n.get
+    }
+    val one = executions(0)
+    assert(one > 0 && executions(3) == one)
+    assert(spark.read.parquet(s"$tmp/out3/hardware_aggregates")
+      .select("date_from").distinct().count() == 4)
+  }
+
   test("annotations CLI writes three JSON artifacts with static merge") {
     val tmp = Files.createTempDirectory("graft-ann").toString
     val schema = StructType(Seq(StructField("build", StructType(Seq(

@@ -133,4 +133,23 @@ class FunctionsSpec extends AnyFunSuite {
       .getDouble(0)
     assert(math.abs(out - 8.0 / math.sqrt(5.0 * 13.0)) < 1e-15)
   }
+
+  test("graft functions register once per session registry, and again when one is missing") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.functions.GraftFunctions
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val dot = FunctionIdentifier("graft_dot")
+    assert(!registry.functionExists(dot))
+    GraftFunctions.register(fresh)
+    assert(GraftFunctions.builders.forall { case (n, _, _) => registry.functionExists(FunctionIdentifier(n)) })
+    // a second call leaves the registered builders in place (re-registering
+    // logs "replaced a previously registered function" per name)
+    val before = registry.lookupFunctionBuilder(dot)
+    GraftFunctions.register(fresh)
+    assert(registry.lookupFunctionBuilder(dot).get eq before.get)
+    registry.dropFunction(dot)
+    GraftFunctions.register(fresh)
+    assert(fresh.sql("SELECT graft_dot(CAST(array(1, 2) AS array<float>), CAST(array(3, 4) AS array<float>))").head().getDouble(0) == 11.0)
+  }
 }

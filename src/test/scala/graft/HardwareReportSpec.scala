@@ -19,6 +19,17 @@ class HardwareReportSpec extends AnyFunSuite {
     "0x10de|0x13d7" -> ("Maxwell", "GM204M")
   )
 
+  private val week1 = (java.sql.Date.valueOf("2020-01-06"), java.sql.Date.valueOf("2020-01-13"))
+
+  /** Stamps every row with one weekly window, the columns each per-week
+    * grouping carries. */
+  private def inWeek(df: org.apache.spark.sql.DataFrame, w: (java.sql.Date, java.sql.Date)) =
+    df.withColumn("date_from", lit(w._1)).withColumn("date_to", lit(w._2))
+
+  /** One week's (date_from, date_to, sample_count, threshold) row. */
+  private def totals(w: (java.sql.Date, java.sql.Date), n: Long, threshold: Long) =
+    Seq((w._1, w._2, n, threshold)).toDF("date_from", "date_to", "sample_count", "threshold")
+
   /** The 6-client synthetic of test_transform_dimensions (:90-140),
     * expressed as the per-combo joint table our pipeline consumes. Client 1
     * carries every "1-count" marginal; clients 2-6 the "5-count" ones.
@@ -37,7 +48,7 @@ class HardwareReportSpec extends AnyFunSuite {
 
   test("aggregateDimensions reproduces transform_dimensions golden (:142-158)") {
     val out = HardwareReport
-      .aggregateDimensions(inputDf, deviceMap)
+      .aggregateDimensions(inWeek(inputDf, week1), deviceMap)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
@@ -80,7 +91,7 @@ class HardwareReportSpec extends AnyFunSuite {
       ("gfx0_model", "Maxwell-GM204", 95L), ("gfx0_model", "Other", 5L)
     ).toDF("dimension", "key", "client_count")
     val out = HardwareReport
-      .collapseBuckets(aggregated, 10L, 100L)
+      .collapseBuckets(inWeek(aggregated, week1), totals(week1, 100L, 10L))
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3))
       .toMap
@@ -107,7 +118,7 @@ class HardwareReportSpec extends AnyFunSuite {
       ("resolution", "1920x1080", 10L)
     ).toDF("dimension", "key", "client_count")
     val out = HardwareReport
-      .collapseBuckets(aggregated, 5L, 100L)
+      .collapseBuckets(inWeek(aggregated, week1), totals(week1, 100L, 5L))
       .collect()
       .map(r => r.getString(1) -> r.getLong(2))
       .toMap
@@ -142,7 +153,7 @@ class HardwareReportSpec extends AnyFunSuite {
       "gfx0_vendor_id", "gfx0_device_id", "client_count"
     )
     val out = HardwareReport
-      .aggregateDimensions(rows, deviceMap)
+      .aggregateDimensions(inWeek(rows, week1), deviceMap)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
@@ -158,16 +169,58 @@ class HardwareReportSpec extends AnyFunSuite {
     assert(flat(0).getString(1) == "resolution_None")
   }
 
-  test("runWeek fails loudly on a week with no data, like load_data's ValueError (:80-83)") {
-    val e = intercept[IllegalArgumentException] {
-      HardwareReport.runWeek(
-        inputDf.withColumn("date_from", lit(java.sql.Date.valueOf("2020-01-06")))
-          .withColumn("date_to", lit(java.sql.Date.valueOf("2020-01-13"))),
-        deviceMap,
-        java.sql.Date.valueOf("1999-01-04"), // week with no rows
-        java.sql.Date.valueOf("1999-01-11")
-      )
+  /** Three weeks of the golden combos with different totals: the
+    * Windows_NT-10.0 combo is 12 of 1212 (above 1%) in the first week, 12
+    * of 2412 (under 1%) in the second and absent from the third. */
+  private val weeks = Seq("2020-01-06", "2020-01-13", "2020-01-20").map { d =>
+    val from = java.time.LocalDate.parse(d)
+    (java.sql.Date.valueOf(from), java.sql.Date.valueOf(from.plusDays(7)))
+  }
+
+  private def weeklyInput = {
+    def rows(w: (java.sql.Date, java.sql.Date), rare: Long, common: Long) = {
+      val week = inWeek(inputDf, w)
+      week.filter($"client_count" === 1L).withColumn("client_count", lit(rare))
+        .unionByName(week.filter($"client_count" === 5L).withColumn("client_count", lit(common)))
     }
-    assert(e.getMessage.contains("No data"))
+    rows(weeks(0), 12L, 1200L)
+      .unionByName(rows(weeks(1), 12L, 2400L))
+      .unionByName(rows(weeks(2), 0L, 700L).filter($"client_count" > 0L))
+  }
+
+  private def collected(df: org.apache.spark.sql.DataFrame) =
+    df.select(
+      date_format($"date_from", "yyyy-MM-dd"), date_format($"date_to", "yyyy-MM-dd"),
+      $"dimension", $"key", $"client_count", $"ratio"
+    ).as[(String, String, String, String, Long, Double)].collect().toSet
+
+  test("all weeks in one pass equal the union of one-week runs") {
+    val input = weeklyInput
+    val all = collected(HardwareReport.aggregateWeeks(input, deviceMap, weeks))
+    val oneByOne = weeks.map(w => collected(HardwareReport.aggregateWeeks(input, deviceMap, Seq(w))))
+    assert(all == oneByOne.reduce(_ ++ _))
+    // the rare combo's keys survive only the week where they clear 1%
+    val cores = all.filter(_._3 == "cpu_cores").map(r => (r._1, r._4) -> r._5).toMap
+    assert(cores(("2020-01-06", "4")) == 12L && !cores.contains(("2020-01-06", "Other")))
+    assert(cores(("2020-01-13", "Other")) == 12L && !cores.contains(("2020-01-13", "4")))
+    assert(!cores.contains(("2020-01-20", "4")) && cores(("2020-01-20", "8")) == 700L)
+    // under the threshold an os key folds per OS family, then to Other
+    val os = all.filter(_._3 == "os").map(r => (r._1, r._4) -> r._5).toMap
+    assert(os(("2020-01-06", "Windows_NT-10.0")) == 12L)
+    assert(os(("2020-01-13", "Other")) == 12L)
+    // ratios normalize by each week's own sample count
+    val ratios = all.filter(r => r._1 == "2020-01-13" && r._3 == "cpu_cores").map(r => r._4 -> r._6).toMap
+    assert(ratios == Map("Other" -> 12.0 / 2412, "8" -> 2400.0 / 2412))
+    assert(all.map(_._1) == Set("2020-01-06", "2020-01-13", "2020-01-20"))
+  }
+
+  test("an empty week of three fails before any work, naming that week") {
+    // the reference fails loudly on an empty week, like load_data's
+    // ValueError (:80-83) — here every window is checked up front
+    val empty = (java.sql.Date.valueOf("1999-01-04"), java.sql.Date.valueOf("1999-01-11"))
+    val e = intercept[IllegalArgumentException] {
+      HardwareReport.aggregateWeeks(weeklyInput, deviceMap, Seq(weeks(0), empty, weeks(2)))
+    }
+    assert(e.getMessage.contains("No data in input for 1999-01-04 to 1999-01-11"))
   }
 }

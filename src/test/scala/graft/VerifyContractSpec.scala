@@ -60,4 +60,26 @@ class VerifyContractSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, s"DecimalType output columns (driver hash-red risk): $offenders")
   }
+
+  test("_manifest.json parses strictly: one entry per query, failures included") {
+    val spark = TestSpark.spark
+    val out = java.nio.file.Files.createTempDirectory("verify-manifest").toString
+    val outcomes = Verify.run(spark, "/root/testdata/sf0.001", out, Seq(
+      "t3_dedup_exact" -> SparkEntry.queries("t3_dedup_exact"),
+      "broken" -> ((_: org.apache.spark.sql.SparkSession, _: String) =>
+        throw new IllegalStateException("a \"quoted\"\nmessage\tand a \\ backslash"))
+    ))
+    val text = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/_manifest.json"))
+    val node = new ObjectMapper().readTree(text) // throws on malformed JSON
+    assert(node.isArray && node.size == 2)
+    val ok = node.get(0)
+    assert(ok.get("name").asText == "t3_dedup_exact" && ok.get("status").asText == "ok")
+    assert(ok.get("rows").asLong == spark.read.parquet(s"$out/t3_dedup_exact").count())
+    assert(ok.get("rows").asLong > 0 && ok.get("error").isNull && ok.get("seconds").asDouble > 0)
+    val bad = node.get(1)
+    assert(bad.get("name").asText == "broken" && bad.get("status").asText == "failed")
+    assert(bad.get("rows").isNull)
+    assert(bad.get("error").asText == "a \"quoted\"\nmessage\tand a \\ backslash")
+    assert(outcomes.map(_.error.isEmpty) == Seq(true, false))
+  }
 }

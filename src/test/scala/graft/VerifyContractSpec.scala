@@ -64,8 +64,8 @@ class VerifyContractSpec extends AnyFunSuite {
   test("_manifest.json parses strictly: one entry per query, failures included") {
     val spark = TestSpark.spark
     val out = java.nio.file.Files.createTempDirectory("verify-manifest").toString
-    val outcomes = Verify.run(spark, "/root/testdata/sf0.001", out, Seq(
-      "t3_dedup_exact" -> SparkEntry.queries("t3_dedup_exact"),
+    val outcomes = Verify.run(spark, "unused", out, Seq(
+      "three_rows" -> ((s: org.apache.spark.sql.SparkSession, _: String) => s.range(3).toDF()),
       "broken" -> ((_: org.apache.spark.sql.SparkSession, _: String) =>
         throw new IllegalStateException("a \"quoted\"\nmessage\tand a \\ backslash"))
     ))
@@ -73,9 +73,8 @@ class VerifyContractSpec extends AnyFunSuite {
     val node = new ObjectMapper().readTree(text) // throws on malformed JSON
     assert(node.isArray && node.size == 2)
     val ok = node.get(0)
-    assert(ok.get("name").asText == "t3_dedup_exact" && ok.get("status").asText == "ok")
-    assert(ok.get("rows").asLong == spark.read.parquet(s"$out/t3_dedup_exact").count())
-    assert(ok.get("rows").asLong > 0 && ok.get("error").isNull && ok.get("seconds").asDouble > 0)
+    assert(ok.get("name").asText == "three_rows" && ok.get("status").asText == "ok")
+    assert(ok.get("rows").asLong == 3 && ok.get("error").isNull && ok.get("seconds").asDouble > 0)
     val bad = node.get(1)
     assert(bad.get("name").asText == "broken" && bad.get("status").asText == "failed")
     assert(bad.get("rows").isNull)

@@ -232,31 +232,24 @@ object Main {
       cfg
     )
     val out = opts("output")
-    // cache: the two artifacts derive from one pipeline result, and each
-    // is collected exactly ONCE — validation runs on the collected rows'
-    // key set (the reference validates rows it already fetched,
-    // user_activity.py:85-90). The earlier shape re-executed the full
-    // 8-way-join DAG six times (two anti-join collects per artifact plus
-    // the export collect).
-    val exported =
-      result.filter(col("country_name").isin(exportCountries: _*)).cache()
-    try {
-      Seq(
-        (JsonExport.fxhealthRows(exported), "fxhealth.json"),
-        (JsonExport.webusageRows(exported), "webusage.json")
-      ).foreach { case (df, name) =>
-        val schema = df.schema
-        val rows = df.collect().toSeq
-        JsonExport.validateCountries(rows.map(_.getString(0)), exportCountries)
-        val asMap = scala.collection.immutable.ListMap(
-          rows.map { r =>
-            r.getString(0) -> JsonWriter.rowToAny(r.get(1), schema(1).dataType)
-          }: _*
-        )
-        JsonExport.writeArtifact(out, name, JsonWriter.write(asMap),
-          archiveDate(opts), isDryRun(opts))
-      }
-    } finally exported.unpersist()
+    // `result` is already local relations (build ran every arm), so one
+    // aggregation carries both artifacts' series and is collected ONCE;
+    // validation runs on the collected rows' key set (the reference
+    // validates rows it already fetched, user_activity.py:85-90), before
+    // either artifact is written.
+    val exported = JsonExport.exportRows(
+      result.filter(col("country_name").isin(exportCountries: _*)))
+    val schema = exported.schema
+    val rows = exported.collect().toSeq
+    JsonExport.validateCountries(rows.map(_.getString(0)), exportCountries)
+    Seq("fxhealth", "webusage").foreach { series =>
+      val i = schema.fieldIndex(series)
+      val asMap = scala.collection.immutable.ListMap(
+        rows.map(r => r.getString(0) -> JsonWriter.rowToAny(r.get(i), schema(i).dataType)): _*
+      )
+      JsonExport.writeArtifact(out, s"$series.json", JsonWriter.write(asMap),
+        archiveDate(opts), isDryRun(opts))
+    }
   }
 
   /** Annotations job (annotations.py:103-133): version spine + static

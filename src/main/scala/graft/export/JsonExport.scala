@@ -14,48 +14,57 @@ import org.apache.spark.sql.functions._
   */
 object JsonExport {
 
-  /** fxhealth.json rows: per country, date-sorted metric records with the
-    * x100 percent scaling (user_activity.py:58-69). */
-  def fxhealthRows(userActivity: DataFrame): DataFrame =
-    userActivity
-      .select(
-        col("country_name"),
-        struct(
-          date_format(col("submission_date"), "yyyy-MM-dd").as("date"),
-          struct(
-            col("intensity").as("avg_intensity"),
-            col("mau").as("MAU"),
-            // the reference's exact (unusual) key, parens included
-            // (user_activity.py:64) — consumers of the public artifact
-            // look this string up verbatim
-            col("avg_hours_usage_daily").as("avg_daily_usage(hours)"),
-            (col("new_profile_rate") * 100).as("pct_new_user"),
-            (col("latest_version_ratio") * 100).as("pct_latest_version")
-          ).as("metrics")
-        ).as("rec")
-      )
-      .groupBy("country_name")
-      .agg(sortByDate(collect_list(col("rec"))).as("series"))
+  /** One fxhealth.json record per (week, country) row: the date and the
+    * metrics with the x100 percent scaling (user_activity.py:58-69). */
+  private def fxhealthRecord: Column =
+    struct(
+      date_format(col("submission_date"), "yyyy-MM-dd").as("date"),
+      struct(
+        col("intensity").as("avg_intensity"),
+        col("mau").as("MAU"),
+        // the reference's exact (unusual) key, parens included
+        // (user_activity.py:64) — consumers of the public artifact
+        // look this string up verbatim
+        col("avg_hours_usage_daily").as("avg_daily_usage(hours)"),
+        (col("new_profile_rate") * 100).as("pct_new_user"),
+        (col("latest_version_ratio") * 100).as("pct_latest_version")
+      ).as("metrics")
+    )
 
-  /** webusage.json rows: locale/addon ratio maps x100 + pct_addon
-    * (user_activity.py:70-83). The name->pct maps travel as ORDERED
-    * k/v struct arrays (not MapType) so Python-dict insertion order
-    * survives collect — see [[nameRatioEntries]]. */
+  /** One webusage.json record per (week, country) row: locale/addon
+    * ratio maps x100 + pct_addon (user_activity.py:70-83). The
+    * name->pct maps travel as ORDERED k/v struct arrays (not MapType) so
+    * Python-dict insertion order survives collect — see
+    * [[nameRatioEntries]]. */
+  private def webusageRecord: Column =
+    struct(
+      date_format(col("submission_date"), "yyyy-MM-dd").as("date"),
+      struct(
+        nameRatioEntries(col("top_locales"), "locale").as("locale"),
+        nameRatioEntries(col("top_addons"), "addon_name").as("top10addons"),
+        (col("has_addon_ratio") * 100).as("pct_addon")
+      ).as("metrics")
+    )
+
+  /** Per country, one date-sorted series column per (name, record): the
+    * one aggregation behind both user-activity artifacts. */
+  private def seriesByCountry(userActivity: DataFrame, records: (String, Column)*): DataFrame = {
+    val series = records.map { case (name, rec) => sortByDate(collect_list(rec)).as(name) }
+    userActivity.groupBy("country_name").agg(series.head, series.tail: _*)
+  }
+
+  /** Both artifacts' rows in one aggregation: `country_name`, the
+    * fxhealth series and the webusage series. */
+  def exportRows(userActivity: DataFrame): DataFrame =
+    seriesByCountry(userActivity, "fxhealth" -> fxhealthRecord, "webusage" -> webusageRecord)
+
+  /** fxhealth.json rows: per country, the date-sorted fxhealth series. */
+  def fxhealthRows(userActivity: DataFrame): DataFrame =
+    seriesByCountry(userActivity, "series" -> fxhealthRecord)
+
+  /** webusage.json rows: per country, the date-sorted webusage series. */
   def webusageRows(userActivity: DataFrame): DataFrame =
-    userActivity
-      .select(
-        col("country_name"),
-        struct(
-          date_format(col("submission_date"), "yyyy-MM-dd").as("date"),
-          struct(
-            nameRatioEntries(col("top_locales"), "locale").as("locale"),
-            nameRatioEntries(col("top_addons"), "addon_name").as("top10addons"),
-            (col("has_addon_ratio") * 100).as("pct_addon")
-          ).as("metrics")
-        ).as("rec")
-      )
-      .groupBy("country_name")
-      .agg(sortByDate(collect_list(col("rec"))).as("series"))
+    seriesByCountry(userActivity, "series" -> webusageRecord)
 
   /** Ordered name -> ratio*100 entries over a top-K struct array, with
     * the reference's exact dict-comprehension semantics

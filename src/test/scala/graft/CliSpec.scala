@@ -321,6 +321,50 @@ class CliSpec extends AnyFunSuite {
     assert(wu.contains("\"top10addons\""))
     assert(wu.contains("\"pct_addon\""))
     assert(wu.contains("\"Worldwide\""))
+    // byte-level goldens of both artifacts: float sums, country key order
+    // (the export aggregation's row order; neither artifact sorts keys)
+    // and the ordered locale/addon objects
+    def golden(name: String): String = new String(
+      getClass.getResourceAsStream(s"/graft/golden/user_activity/$name").readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(fx == golden("fxhealth.json"), s"fxhealth.json drifted from the golden:\n$fx")
+    assert(wu == golden("webusage.json"), s"webusage.json drifted from the golden:\n$wu")
+  }
+
+  test("user_activity releases its cache and arm threads, also when an arm fails") {
+    import scala.jdk.CollectionConverters._
+    val tmp = Files.createTempDirectory("graft-ua-cleanup").toString
+    new UserActivitySpec().writeFixtures(spark, tmp)
+    // a release build whose major version overflows a long: the
+    // latest-version arm's cast throws while that arm executes, after
+    // the weekly-stats collect has materialized the cached sample
+    val buildhubSchema = spark.read.parquet(s"$tmp/buildhub").schema
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Row(
+        Row("99999999999999999999.0", "release"),
+        Row(java.sql.Timestamp.valueOf("2018-12-03 10:00:00")))))),
+      buildhubSchema
+    ).write.mode("overwrite").parquet(s"$tmp/overflow_buildhub")
+    def run(buildhub: String): Unit = Main.userActivity(spark, Map(
+      "clients" -> s"$tmp/clients",
+      "country_names" -> s"$tmp/countries",
+      "buildhub" -> buildhub,
+      "countries" -> "Worldwide,United States,Germany,France",
+      "output" -> s"$tmp/out",
+      "archive_date" -> "2020-06-29"
+    ))
+    def armThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-useractivity-arm-"))
+    spark.catalog.clearCache()
+    run(s"$tmp/buildhub")
+    assert(spark.sharedState.cacheManager.isEmpty, "the cached sample outlived the job")
+    assert(armThreads.isEmpty, s"arm threads left running: $armThreads")
+    val e = intercept[Exception](run(s"$tmp/overflow_buildhub"))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("99999999999999999999")),
+      s"the failing arm's exception did not reach the caller: $e")
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed arm left the sample cached")
+    assert(armThreads.isEmpty, s"arm threads left running after a failure: $armThreads")
   }
 
   test("artifacts get a dated archive copy; --dry_run skips the JSON sink but not the warehouse write") {

@@ -85,24 +85,25 @@ class PlanAuditSpec extends AnyFunSuite {
     for (q <- Seq("j3_weekly_metrics", "ua_full_pipeline")) {
       assert(!plan(q).contains("SortMergeJoin"), s"$q regressed to sort-merge")
     }
-    // ua_full's 8-way assembly, pinned by SHAPE after the r7 bench scare
-    // (2.45 s vs r6's 1.95 s): an A/B at both commits found bit-identical
-    // physical plans and overlapping timing bands (HEAD 2.15-2.71,
-    // r6 1.83-2.80 over 9 idle runs) — environment noise, not regression.
-    // These bounds catch the real failure modes: a metric CTE losing its
-    // broadcast (join count drops, exchange count rises) or a new
-    // corpus-grain shuffle sneaking into the assembly.
-    // r15 re-pin: weeklyStats is computed once and collected into a
-    // local relation (its two duplicate Expand-aggregate subtrees left
-    // the plan entirely), so the broadcast-join floor drops 25 -> 22
-    // and the exchange ceiling tightens. The failure modes guarded are
-    // unchanged: a metric CTE losing its broadcast drops bhj below the
-    // floor; a corpus-grain shuffle sneaking in raises exchanges.
-    val ua = plan("ua_full_pipeline")
-    val exchanges = ua.linesIterator.count(_.contains("Exchange hashpartitioning"))
-    val bhj = ua.linesIterator.count(_.contains("BroadcastHashJoin"))
-    assert(exchanges <= 18, s"ua_full assembly grew extra shuffles ($exchanges)")
-    assert(bhj >= 22, s"ua_full assembly lost broadcast joins ($bhj)")
+    // ua_full's 8-way assembly, pinned by SHAPE: build() runs every
+    // corpus-grain operator itself (the weekly-stats collect, then the
+    // five metric arms' collects) and returns broadcast joins of six local
+    // relations. So the frame it returns reads no input and shuffles
+    // nothing: a FileScan or a hash exchange here means an arm went back
+    // to being a lazy subplan, and fewer than five broadcast joins means
+    // an arm lost its broadcast.
+    val cfg = graft.useractivity.UserActivity.Config(
+      countries = graft.operators.UserActivityFull.uaCountries)
+    val built = graft.useractivity.UserActivity.build(
+      graft.operators.UserActivityFull.synthClients(spark, sf),
+      graft.operators.UserActivityFull.synthCountryNames(spark, sf),
+      graft.operators.UserActivityFull.synthBuildhub(spark, sf),
+      cfg).queryExecution.executedPlan.toString
+    def count(op: String) = built.linesIterator.count(_.contains(op))
+    assert(count("FileScan") == 0, s"ua_full assembly reads its inputs again:\n$built")
+    assert(count("Exchange hashpartitioning") == 0, s"ua_full assembly shuffles:\n$built")
+    assert(count("SortMergeJoin") == 0, s"ua_full assembly regressed to sort-merge:\n$built")
+    assert(count("BroadcastHashJoin") == 5, s"ua_full assembly lost broadcast joins:\n$built")
   }
 
   test("rank-then-filter queries keep Spark 4's WindowGroupLimit pushdown engaged") {

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.export.JsonWriter
 
 /** Benchmark main: one JSON line with per-query steady-state seconds.
   *
@@ -14,20 +15,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle partitions sized to the DATA, not the core count: bench reads
     // ~50 MB at sf0.1, so 8 partitions keeps task-scheduling overhead off
     // the per-query floor (32 partitions cost ~20% wall clock here). At
     // production scale this knob goes to thousands — the sizing rule is
     // partition bytes, not cores (override via SPARK_GRAFT_SHUFFLE).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8").toInt
+    val spark = GraftSession.start(shufflePartitions = Some(shuffle))
+    val cpus = GraftSession.threads
     // A failing query must turn the bench RED, not faster: the old silent
     // catch let a broken query time out at ~0s, shrink the total, and exit
     // rc=0. Every error is recorded per query and the run exits non-zero.
@@ -98,24 +93,17 @@ object Bench {
       String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
     def jsonMap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + num(v, 3) }.mkString("{", ",", "}")
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val errJson = errors
-      .map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      .map { case (k, v) => JsonWriter.esc(k) + ":" + JsonWriter.esc(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val runsJson = samples
       .map { case (k, vs) =>
-        jsonStr(k) + ":[" + vs.map(v => num(v, 3)).mkString(",") + "]"
+        JsonWriter.esc(k) + ":[" + vs.map(v => num(v, 3)).mkString(",") + "]"
       }
       .mkString("{", ",", "}")
     val loadJson =
-      s"""{"start":${jsonStr(loadStart)},"end":${jsonStr(loadavg())},"cpus":"$cpus"}"""
+      s"""{"start":${JsonWriter.esc(loadStart)},"end":${JsonWriter.esc(loadavg())},"cpus":"$cpus"}"""
     // self-certifying canonical sync (round-12 verdict ask #7): the
     // committed map and the driver artifact kept diverging by box-phase
     // noise that only re-runs could adjudicate — now a run whose START

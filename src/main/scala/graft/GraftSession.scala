@@ -1,38 +1,50 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.functions.GraftFunctions
-import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 
-/** SQL-first entry point: registers every testdata table as a temp view and
-  * the native graft functions on the session, so a user of the reference —
-  * whose workflow is "write SQL against named tables" — can keep doing
-  * exactly that:
+/** The one place graft builds a session and sets its confs. Every main
+  * (`cli.Main`, `Verify`, `Bench`, `Explain`, the `tools` mains) and the
+  * test suite's shared session get the same recipe, the one Verify checks
+  * against the oracle:
   *
-  * {{{
-  *   GraftSession.registerAll(spark, "/root/testdata/sf0.01")
-  *   spark.sql("SELECT l_returnflag, sum(l_quantity) FROM lineitem GROUP BY 1")
-  *   spark.sql("SELECT graft_dot(a.embedding, b.embedding) FROM embeddings a, embeddings b")
-  * }}}
+  *   - master `SPARK_MASTER`, default `local[threads]`;
+  *   - `spark.sql.shuffle.partitions` = `threads` unless the caller passes
+  *     a count;
+  *   - UTC session time zone, UI off, log level WARN;
+  *   - `spark.sql.codegen.fallback=false`: a whole-stage codegen compile
+  *     error fails the query instead of silently running interpreted. The
+  *     silent fallback once hid the graft_dot freshName collision for two
+  *     rounds and cost m7 2.1× (SCALING.md round 9b).
+  *
+  * Job-specific write modes are not part of the recipe: the hardware job
+  * asks for dynamic partition overwrite on its own write.
   */
 object GraftSession {
 
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings"
-  )
+  /** Local worker threads: `SPARK_GRAFT_CPUS`, else every available core. */
+  lazy val threads: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(spark)
-    tableNames.foreach {
-      // events needs the nanos-timestamp conversion path
-      case "events" => Tables.events(spark, dir).createOrReplaceTempView("events")
-      case t => Tables.table(spark, dir, t).createOrReplaceTempView(t)
-    }
-  }
-
-  def sql(spark: SparkSession, dir: String, query: String): DataFrame = {
-    registerAll(spark, dir)
-    spark.sql(query)
+  /** Gets or creates the session with the recipe above. `warehouseDir` is
+    * a deployment path (the test suite points it at a temp dir). */
+  def start(
+      shufflePartitions: Option[Int] = None,
+      threads: Int = GraftSession.threads,
+      warehouseDir: Option[String] = None
+  ): SparkSession = {
+    val builder = SparkSession
+      .builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$threads]"))
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(threads).toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.fallback", "false")
+    val spark = warehouseDir
+      .fold(builder)(builder.config("spark.sql.warehouse.dir", _))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -12,24 +12,8 @@ object Verify {
     // optional third arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fail LOUDLY on whole-stage codegen compile errors instead of the
-      // default silent interpreted fallback — the correctness run doubles
-      // as the codegen gate (the graft_dot freshName collision hid behind
-      // the fallback for two rounds, costing m7 2.1×; SCALING.md round
-      // 9b). Escape hatch for a legitimately uncompilable future plan:
-      // SPARK_GRAFT_CODEGEN_FALLBACK=true restores the default.
-      .config(
-        "spark.sql.codegen.fallback",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_FALLBACK", "false")
-      )
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the recipe's codegen.fallback=false makes this run the codegen gate too
+    val spark = GraftSession.start()
     val selected = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
     val failed = run(spark, sfDir, outDir, selected.toSeq).filter(_.error.nonEmpty).map(_.name)
     spark.stop()
@@ -100,22 +84,12 @@ object Verify {
     ) + "\n"
 
   /** The oracle map rendered as the JSON document the driver's json.load
-    * consumes. JSON string escape: backslash, quote, and ALL control
-    * chars (<0x20) — a tab or CR in builder-authored SQL would otherwise
+    * consumes, escaped by [[JsonWriter.esc]] (backslash, quote and every
+    * control char: a tab or CR in builder-authored SQL would otherwise
     * make the driver's parse fail and silently zero the round's
-    * correctness. Factored out so VerifyContractSpec can round-trip every
+    * correctness). Factored out so VerifyContractSpec can round-trip every
     * oracle through a strict parser on every test run. */
-  private[graft] def oracleJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private[graft] def oracleJson: String =
     SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+      .map { case (k, v) => s"${JsonWriter.esc(k)}: ${JsonWriter.esc(v)}" }.mkString("{", ",", "}")
 }

@@ -26,20 +26,6 @@ import graft.useractivity.{CountryList, UserActivity}
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Valueless flags (click `is_flag` options): both dry-run spellings the
     * reference accepts (hardware_report.py:409-414) normalize to
     * `dry_run=true`; `--list` belongs to the query subcommand. */
@@ -84,7 +70,7 @@ object Main {
   def main(args: Array[String]): Unit = args.toSeq match {
     case cmd +: rest =>
       val opts = parseArgs(rest)
-      val spark = session()
+      val spark = graft.GraftSession.start()
       try cmd match {
         case "hardware_report" => hardwareReport(spark, opts)
         case "user_activity" => userActivity(spark, opts)
@@ -167,10 +153,6 @@ object Main {
     * write; then readback, flatten, JSON export. An empty window fails
     * the job before any partition is written. */
   def hardwareReport(spark: SparkSession, opts: Map[String, String]): Unit = {
-    // dynamic partition overwrite = the reference's `table$YYYYMMDD` +
-    // WRITE_TRUNCATE idempotent weekly upsert (hardware_report.py:459-465):
-    // the one write replaces exactly the weeks it carries.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val input = spark.read.parquet(opts("input"))
     val out = opts("output")
     val weeks = opts.getOrElse("past_weeks", "0").toInt
@@ -184,6 +166,11 @@ object Main {
       .aggregateWeeks(input, deviceMap, windows)
       .write
       .mode("overwrite")
+      // dynamic partition overwrite = the reference's `table$YYYYMMDD` +
+      // WRITE_TRUNCATE idempotent weekly upsert (hardware_report.py:459-465):
+      // the one write replaces exactly the weeks it carries. A write
+      // option, so the caller's session conf is left as it was.
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date_from")
       .parquet(s"$out/hardware_aggregates")
     val readback = spark.read.parquet(s"$out/hardware_aggregates").orderBy("date_from")

@@ -671,7 +671,8 @@ object MultimodalOps {
     * [4, 256]).
     *
     * THE MEASURED SCALE ADJUDICATION (SCALING.md round 9): on this
-    * corpus the lever buys parity, not a win. ListBgProbe shows the
+    * corpus the lever buys parity, not a win. The m7d probe
+    * (`m7d_ivf_probe_decision`) shows the
     * stub-trigram embedding has almost no cluster structure (in-list
     * neighbor-pair median cos 0.08 vs corpus 0.0; in-list E[p_bg^14]
     * only 2× corpus), so the lists barely concentrate — the candidate
@@ -753,7 +754,7 @@ object MultimodalOps {
 
   /** m7d — the IVF go/no-go DECISION PROBE as a declared one-row frame:
     * the measurement that adjudicates m7b (corpus-wide banding) vs m7c
-    * (IVF-pruned banding) per corpus, promoted from `tools/ListBgProbe`
+    * (IVF-pruned banding) per corpus, promoted from an ad-hoc probe main
     * into the oracle-checked catalog (the v14b/t42 convention: a
     * planning scalar a pipeline decides by deserves a hash-green row per
     * ingest, not a tool someone remembers to run).

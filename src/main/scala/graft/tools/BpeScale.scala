@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Production-vocabulary measurement for `graft_bpe_encode` (SCALING.md's
@@ -71,15 +70,8 @@ object BpeScale {
     // since round 13: the vocab is Heaps-bounded driver state anyway, so
     // capping is a measurement lever, not a necessity)
     val sampleWords = args.lift(2).map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(
+      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt))
     graft.functions.GraftFunctions.register(spark)
 
     val toks = graft.functions.F.wsTokens(col("text"))

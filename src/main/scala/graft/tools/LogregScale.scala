@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Production-config rehearsal for the v35 trainer: the declared query
@@ -20,13 +19,7 @@ object LogregScale {
     val dir = args(0)
     val iters = if (args.length > 1) args(1).toInt else 20
     val dims = if (args.length > 2) args(2).toInt else 64
-    val spark = SparkSession.builder
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start()
 
     val x = (j: Int) => col("embedding").getItem(j - 1).cast("double")
     val cols =

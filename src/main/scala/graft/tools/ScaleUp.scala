@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-rehearsal corpus generator: synthesizes an ~sf(R/10) dataset from
@@ -132,13 +132,7 @@ object ScaleUp {
     val facts = Seq("documents", "embeddings", "events", "orders", "lineitem")
     val selected: Set[String] =
       if (args.length > 3) args(3).split(",").toSet else facts.toSet
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start()
 
     val outPath = java.nio.file.Paths.get(out)
     java.nio.file.Files.createDirectories(outPath)

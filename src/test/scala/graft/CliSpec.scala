@@ -102,6 +102,22 @@ class CliSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Path.of(s"$tmp/out/hardware_aggregates")))
   }
 
+  test("hardware_report: a rerun over one week keeps the other weeks, session conf untouched") {
+    val tmp = Files.createTempDirectory("graft-hw-rerun").toString
+    hardwareInput(s"$tmp/input", Seq("2020-01-13", "2020-01-06"))
+    Seq("2020-01-06", "2020-01-13").foreach { d =>
+      Main.hardwareReport(spark, Map(
+        "input" -> s"$tmp/input", "date_from" -> d,
+        "past_weeks" -> "0", "output" -> s"$tmp/out"))
+    }
+    val weeks = spark.read.parquet(s"$tmp/out/hardware_aggregates")
+      .select("date_from").distinct().as[java.sql.Date].collect().map(_.toString).toSet
+    assert(weeks == Set("2020-01-06", "2020-01-13"))
+    // dynamic overwrite is an option of the job's write, not a session conf
+    val mode = org.apache.spark.sql.internal.SQLConf.PARTITION_OVERWRITE_MODE
+    assert(spark.conf.get(mode.key) == mode.defaultValueString)
+  }
+
   test("hardware_report runs as many SQL executions for four weeks as for one") {
     // the weeks share one pass; a per-week loop would add executions per week
     val tmp = Files.createTempDirectory("graft-hw-execs").toString

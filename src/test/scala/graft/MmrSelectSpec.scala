@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions
@@ -12,11 +11,7 @@ import graft.functions.GraftFunctions
   */
 class MmrSelectSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   /** (id, rel, vec): ids 1 and 2 are near-identical vectors with the two
     * highest relevances; id 3 is orthogonal with lower relevance. Pure

@@ -2,22 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole suite. */
+/** One shared local session for the whole suite: the graft recipe at a
+  * fixed 4 threads, so split sizes and shuffle partitioning (and with them
+  * the float sums the goldens pin) do not depend on the box's core count. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-      )
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.start(
+      threads = 4,
+      warehouseDir =
+        Some(java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    )
 }

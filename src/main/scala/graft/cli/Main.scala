@@ -219,13 +219,12 @@ object Main {
       cfg
     )
     val out = opts("output")
-    // `result` is already local relations (build ran every arm), so one
-    // aggregation carries both artifacts' series and is collected ONCE;
-    // validation runs on the collected rows' key set (the reference
-    // validates rows it already fetched, user_activity.py:85-90), before
-    // either artifact is written.
-    val exported = JsonExport.exportRows(
-      result.filter(col("country_name").isin(exportCountries: _*)))
+    // `result` is one local relation (build ran every arm) holding only
+    // cfg.countries, so one aggregation carries both artifacts' series and
+    // is collected ONCE; validation runs on the collected rows' key set
+    // (the reference validates rows it already fetched,
+    // user_activity.py:85-90), before either artifact is written.
+    val exported = JsonExport.exportRows(result)
     val schema = exported.schema
     val rows = exported.collect().toSeq
     JsonExport.validateCountries(rows.map(_.getString(0)), exportCountries)

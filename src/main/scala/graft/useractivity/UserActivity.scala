@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executor
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.F
 
 /** The user-activity aggregate pipeline — the Spark re-expression of the
@@ -16,7 +17,8 @@ import graft.functions.F
   * aggregation below is partial-aggregated map-side and AQE handles the
   * skewed final merge. Every metric arm's output is keyed by (week,
   * country) — a keyspace bounded by construction — so [[build]] collects
-  * each arm and assembles them by broadcast joins of local relations.
+  * each arm and joins the collected rows on the driver into one local
+  * relation.
   */
 object UserActivity {
 
@@ -189,23 +191,28 @@ object UserActivity {
     * user_activity.sql:245-255): window row_number for the K cutoff, then
     * collect into the BQ ARRAY_AGG(STRUCT(...) ORDER BY ... LIMIT K) shape.
     * Ties break deterministically by name (BQ leaves them unspecified).
+    *
+    * Ranks by the distinct-client count `user_count`, not by the
+    * reference's ratio user_count / wau: within one (week, country) group
+    * every row divides by the same wau, so both orders agree, and the arm
+    * needs no wau. [[build]] divides the kept counts by wau.
     */
   private def topK(
-      ratios: DataFrame,
+      counts: DataFrame,
       nameCol: String,
       k: Int,
       outCol: String
   ): DataFrame = {
     val w = Window
       .partitionBy("week_start", "country_name")
-      .orderBy(col("ratio").desc, col(nameCol).asc)
-    ratios
+      .orderBy(col("user_count").desc, col(nameCol).asc)
+    counts
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .groupBy("week_start", "country_name")
       .agg(
         sort_array(
-          collect_list(struct(col("rnk"), struct(col(nameCol), col("ratio")).as("s")))
+          collect_list(struct(col("rnk"), struct(col(nameCol), col("user_count")).as("s")))
         ).as("sorted")
       )
       .select(
@@ -215,84 +222,94 @@ object UserActivity {
       )
   }
 
-  /** `addon_counts` .. `top_addons` (user_activity.sql:198-255). */
-  def topAddons(sampleAddons: DataFrame, mauWau: DataFrame): DataFrame = {
+  /** `addon_counts` .. `top_addons` (user_activity.sql:198-255), as
+    * counts: `top_addons` holds (addon_name, user_count) entries. */
+  def topAddons(sampleAddons: DataFrame): DataFrame = {
     val counts = sampleAddons
       .groupBy("week_start", "country_name", "addon_id", "addon_name")
       .agg(countDistinct(when(countableAddon, col("client_id"))).as("user_count"))
-    val ratios = counts
-      // mau_wau is one row per (week, country) — broadcast to the counts
-      .join(broadcast(mauWau), Seq("week_start", "country_name"))
-      .select(
-        col("week_start"), col("country_name"), col("addon_name"),
-        (col("user_count") / col("wau")).as("ratio")
-      )
-    topK(ratios, "addon_name", 10, "top_addons")
+    topK(counts, "addon_name", 10, "top_addons")
   }
 
   /** `has_addon` (user_activity.sql:256-285): countable-addon users over
     * all users — the denominator includes zero-addon clients because the
-    * outer unnest preserved them (intended semantics, SURVEY §7.5). */
+    * outer unnest preserved them (intended semantics, SURVEY §7.5). Both
+    * distinct counts come from one per-client aggregation, as in
+    * [[weeklyStats]]. */
   def hasAddon(sampleAddons: DataFrame): DataFrame =
     sampleAddons
+      .groupBy("week_start", "country_name", "client_id")
+      .agg(count(when(countableAddon, 1)).as("countable_rows"))
       .groupBy("week_start", "country_name")
       .agg(
-        (countDistinct(when(countableAddon, col("client_id"))) /
-          countDistinct(col("client_id"))).as("has_addon_ratio")
+        (countClients(col("countable_rows") > 0) / count(col("client_id")))
+          .as("has_addon_ratio")
       )
 
-  /** `locale_counts` .. `top_locales` (user_activity.sql:286-325). */
-  def topLocales(sample: DataFrame, mauWau: DataFrame): DataFrame = {
+  /** `locale_counts` .. `top_locales` (user_activity.sql:286-325), as
+    * counts: `top_locales` holds (locale, user_count) entries. */
+  def topLocales(sample: DataFrame): DataFrame = {
     val counts = sample
       .filter(col("days_since_seen") < 7 && col("is_last_day_of_week"))
       .groupBy("week_start", "country_name", "locale")
       .agg(countDistinct(col("client_id")).as("user_count"))
-    val ratios = counts
-      .join(broadcast(mauWau), Seq("week_start", "country_name"))
-      .select(
-        col("week_start"), col("country_name"), col("locale"),
-        (col("user_count") / col("wau")).as("ratio")
-      )
-    topK(ratios, "locale", 5, "top_locales")
+    topK(counts, "locale", 5, "top_locales")
   }
 
   /** `mau_wau` + `intensity` + `new_profile_rate` in ONE aggregation pass.
     * The reference writes them as three CTEs (user_activity.sql:72-140),
     * but they share the scan, the `is_last_day_of_week` filter AND the
-    * (week, country) grain — so [[build]] computes all six measures in a
-    * single groupBy (one scan + one shuffle instead of three of each).
+    * (week, country) grain — so [[build]] computes all six measures in one
+    * pass over the scan instead of three.
     * Semantics are identical: the conditional aggregates reproduce each
     * CTE's row filter, and groups that would be absent from the stricter
     * CTEs (no days_since_seen<7 rows → NULL intensity here) are dropped
     * by the same inner joins that would have dropped them before, because
     * top_locales requires the identical filter to produce the group at
     * all. The standalone per-CTE methods remain above — they are the
-    * reference-shaped forms the unit specs pin. */
-  def weeklyStats(sample: DataFrame): DataFrame =
+    * reference-shaped forms the unit specs compare this pass against.
+    *
+    * The two distinct counts are two plain aggregations: per client
+    * first, then per (week, country) counting the clients that passed
+    * each condition. `countDistinct` on two different columns plans an
+    * Expand that triples every row before the first shuffle; the
+    * per-client grain shuffles each row once. The other measures are
+    * integer sums and counts, so summing them per client first changes
+    * no value. */
+  def weeklyStats(sample: DataFrame): DataFrame = {
+    val active = col("days_since_seen") < 7
     sample
       .filter(col("is_last_day_of_week"))
+      .groupBy("week_start", "country_name", "client_id")
+      .agg(
+        count(when(col("days_since_seen") < 28, 1)).as("monthly_rows"),
+        count(when(active, 1)).as("weekly_rows"),
+        sum(when(active, F.bitcountLowest7(col("days_seen_bits")))).as("weekly_bits"),
+        count(when(F.posOfTrailingSetBit(col("days_created_profile_bits")) < 7, 1)).as("new_rows"),
+        count(when(F.posOfTrailingSetBit(col("days_seen_bits")) < 7, 1)).as("seen_rows")
+      )
       .groupBy("week_start", "country_name")
       .agg(
-        countDistinct(when(col("days_since_seen") < 28, col("client_id"))).as("mau"),
-        countDistinct(when(col("days_since_seen") < 7, col("client_id"))).as("wau"),
-        F.safeDiv(
-          sum(when(col("days_since_seen") < 7, F.bitcountLowest7(col("days_seen_bits")))),
-          count(when(col("days_since_seen") < 7, 1))
-        ).as("intensity"),
-        F.safeDiv(
-          count(when(F.posOfTrailingSetBit(col("days_created_profile_bits")) < 7, 1)),
-          count(when(F.posOfTrailingSetBit(col("days_seen_bits")) < 7, 1))
-        ).as("new_profile_rate")
+        countClients(col("monthly_rows") > 0).as("mau"),
+        countClients(col("weekly_rows") > 0).as("wau"),
+        F.safeDiv(sum("weekly_bits"), sum("weekly_rows")).as("intensity"),
+        F.safeDiv(sum("new_rows"), sum("seen_rows")).as("new_profile_rate")
       )
+  }
+
+  /** Over per-client rows: the number of non-null clients whose row
+    * passes `cond` — `countDistinct(when(cond, client_id))` one level up. */
+  private def countClients(cond: Column): Column =
+    count(when(col("client_id").isNotNull && cond, 1))
 
   /** Final 8-way assembly + armagaddon-week exclusion
     * (user_activity.sql:326-360).
     *
     * Eager: every corpus-grain operator runs inside this call, and the
-    * returned frame is broadcast joins of six local relations, one per
-    * metric arm. Every arm therefore has snapshot semantics — the result
-    * reflects the inputs as they were when `build` ran — and executing
-    * the returned frame reads no input. `sample` is cached for the
+    * returned frame is one local relation holding the joined rows of the
+    * six metric arms. Every arm therefore has snapshot semantics — the
+    * result reflects the inputs as they were when `build` ran — and
+    * executing the returned frame runs no job. `sample` is cached for the
     * duration of the call and released before it returns, also when an
     * arm fails. */
   def build(
@@ -304,22 +321,18 @@ object UserActivity {
     // Every arm below has its output bounded by construction: (weeks ×
     // country allowlist) rows — cfg's date window caps the weeks,
     // cfg.countries the names — no matter how big the fact table is, with
-    // at most 10 or 5 array entries per row. So each arm is collected into
-    // a local relation (the same bounded driver transfer class as
-    // IvfAnn's k-centroid collect), and the assembly joins build
-    // zero-job broadcasts instead of re-planning the aggregates.
+    // at most 10 or 5 array entries per row. So each arm is collected (the
+    // same bounded driver transfer class as IvfAnn's k-centroid collect)
+    // and the rows are joined on the driver.
     //
     // `sample` feeds all six arms, so it is decoded once into the cache
-    // instead of once per arm. The weeklyStats collect runs first: it
-    // materializes the cache, and two arms (top_addons, top_locales) need
-    // its wau denominator. The other five arms then collect concurrently
-    // over the warm cache. Measured on the report_jobs bench (4 vCPU,
-    // 30k client rows, 10 alternating pairs): the job's median warm time
-    // fell from 4.43 s to 3.29 s against the earlier design, one lazy plan
-    // holding six copies of the `sample` scan. Caching measured as a loss
-    // on that design, because there the cache only added a serial
-    // materialization job while the uncached arms ran in parallel inside
-    // the one plan anyway.
+    // instead of once per arm. No arm needs another arm's output (the
+    // top-K arms rank by count and leave the division by wau to the
+    // assembly), so all six collect concurrently, in one wave. Each arm's
+    // plan then starts with its own job materializing the cache (AQE's
+    // table-cache stage), but the cache is built once: a task that finds
+    // a partition being built by another job's task waits for it and
+    // reads the stored block.
     //
     // dailyUsage is the only arm that sums doubles. Reading the cached
     // sample keeps the scan's partitions and row order, so its two-level
@@ -328,24 +341,22 @@ object UserActivity {
     // other arms, or fusing it into one of them, would reorder those sums.
     val smp = sample(clientsLastSeen, countryNames, cfg).cache()
     try {
-      val mwAgg = weeklyStats(smp)
-      val mw = local(mwAgg, mwAgg.collect())
       val addons = sampleAddons(smp)
-      val arms = collectConcurrently(
-        Seq(
-          dailyUsage(smp),
-          latestVersionRatio(smp, buildhub),
-          topAddons(addons, mw),
-          topLocales(smp, mw),
-          hasAddon(addons)
-        )
+      val arms = Seq(
+        weeklyStats(smp),
+        dailyUsage(smp),
+        latestVersionRatio(smp, buildhub),
+        topAddons(addons),
+        topLocales(smp),
+        hasAddon(addons)
       )
-      // inner joins on (week, country): a group missing from any arm is
-      // dropped, as in the reference's join chain
-      val keys = Seq("week_start", "country_name")
-      arms
-        .foldLeft(mw)((acc, arm) => acc.join(broadcast(arm), keys))
-        .filter(!col("week_start").cast("string").isin(cfg.excludedWeeks: _*))
+      // the reference's top-K entries: (name, user_count / wau)
+      def ratios(arm: String, name: String): Column =
+        transform(col(arm), e => struct(
+          e.getField(name).as(name),
+          (e.getField("user_count") / col("wau")).as("ratio")
+        )).as(arm)
+      assemble(arms, collectConcurrently(arms), cfg.excludedWeeks.toSet)
         .select(
           col("week_start").as("submission_date"),
           col("country_name"),
@@ -354,23 +365,46 @@ object UserActivity {
           col("intensity"),
           col("new_profile_rate"),
           col("latest_version_ratio"),
-          col("top_addons"),
+          ratios("top_addons", "addon_name"),
           col("has_addon_ratio"),
-          col("top_locales")
+          ratios("top_locales", "locale")
         )
     } finally smp.unpersist()
   }
 
-  /** `df`'s collected `rows` as a local relation with `df`'s schema. */
-  private def local(df: DataFrame, rows: Array[Row]): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  /** Inner join of the collected arms on (week_start, country_name), in
+    * the first arm's row order, without the `excludedWeeks` rows: a group
+    * missing from any arm is dropped, as in the reference's join chain.
+    * The result is a local relation with the keys and then every arm's
+    * other columns, so a projection over it runs no job. */
+  private def assemble(
+      arms: Seq[DataFrame],
+      rows: Seq[Array[Row]],
+      excludedWeeks: Set[String]
+  ): DataFrame = {
+    val keys = Seq("week_start", "country_name")
+    val (fields, keyed) = arms.zip(rows).map { case (df, rs) =>
+      val k = keys.map(df.schema.fieldIndex)
+      val v = df.schema.indices.filterNot(k.contains)
+      (v.map(df.schema(_)), rs.toSeq.map(r => k.map(r.get) -> v.map(r.get)))
+    }.unzip
+    val others = keyed.tail.map(_.toMap)
+    val joined = for {
+      (key, first) <- keyed.head
+      if !excludedWeeks(key.head.toString)
+      rest = others.flatMap(_.get(key))
+      if rest.size == others.size
+    } yield Row.fromSeq(key ++ first ++ rest.flatten)
+    val schema = StructType(keys.map(arms.head.schema(_)) ++ fields.flatten)
+    arms.head.sparkSession.createDataFrame(java.util.Arrays.asList(joined: _*), schema)
+  }
 
-  /** Collects every frame into a local relation, concurrently, on a pool
-    * owned by this call: one thread per frame, each created here on the
-    * caller's thread (so it inherits the caller's Spark local
-    * properties). Every thread has ended before this returns or throws;
-    * the first failing frame's exception, in input order, is rethrown. */
-  private def collectConcurrently(frames: Seq[DataFrame]): Seq[DataFrame] = {
+  /** Collects every frame, concurrently, on a pool owned by this call:
+    * one thread per frame, each created here on the caller's thread (so
+    * it inherits the caller's Spark local properties). Every thread has
+    * ended before this returns or throws; the first failing frame's
+    * exception, in input order, is rethrown. */
+  private def collectConcurrently(frames: Seq[DataFrame]): Seq[Array[Row]] = {
     val threads = new ConcurrentLinkedQueue[Thread]
     val pool = Executors.newFixedThreadPool(
       frames.size,
@@ -383,8 +417,8 @@ object UserActivity {
     )
     try {
       val pending = frames.map(df => pool.submit(() => df.collect()))
-      frames.zip(pending).map { case (df, rows) =>
-        try local(df, rows.get())
+      pending.map { rows =>
+        try rows.get()
         catch { case e: ExecutionException => throw e.getCause }
       }
     } finally {

@@ -347,13 +347,50 @@ class CliSpec extends AnyFunSuite {
     assert(wu == golden("webusage.json"), s"webusage.json drifted from the golden:\n$wu")
   }
 
+  test("user_activity runs a fixed number of Spark jobs, its arms in one concurrent wave") {
+    // the six metric arms collect concurrently and are joined on the
+    // driver, so a broadcast join in the assembly adds one job per arm.
+    // Every arm that starts before the cached sample is built runs its own
+    // job materializing it (AQE's table-cache stage; the tasks of one
+    // partition wait for one build). How many arms get there first is a
+    // race, so those jobs are counted apart: an arm collected on its own
+    // before the others leaves exactly one.
+    val tmp = Files.createTempDirectory("graft-ua-jobs").toString
+    new UserActivitySpec().writeFixtures(spark, tmp)
+    var jobs, cacheJobs = 0 // the listener bus calls back on one thread
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      // a cache-materializing job is one stage whose own RDD (the head of
+      // its RDD infos) is the persisted one
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.size == 1 && e.stageInfos.head.rddInfos.head.storageLevel.isValid)
+          cacheJobs += 1
+        else jobs += 1
+    }
+    spark.catalog.clearCache()
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Main.userActivity(spark, Map(
+        "clients" -> s"$tmp/clients",
+        "country_names" -> s"$tmp/countries",
+        "buildhub" -> s"$tmp/buildhub",
+        "countries" -> "Worldwide,United States,Germany,France",
+        "output" -> s"$tmp/out",
+        "archive_date" -> "2020-06-29"
+      ))
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs == 28, s"user_activity ran $jobs Spark jobs besides its $cacheJobs cache jobs")
+    assert(cacheJobs >= 2, s"only $cacheJobs arm started before the sample was cached")
+  }
+
   test("user_activity releases its cache and arm threads, also when an arm fails") {
     import scala.jdk.CollectionConverters._
     val tmp = Files.createTempDirectory("graft-ua-cleanup").toString
     new UserActivitySpec().writeFixtures(spark, tmp)
     // a release build whose major version overflows a long: the
-    // latest-version arm's cast throws while that arm executes, after
-    // the weekly-stats collect has materialized the cached sample
+    // latest-version arm's cast throws while that arm executes, in the
+    // same wave as the other five arms
     val buildhubSchema = spark.read.parquet(s"$tmp/buildhub").schema
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(Row(

@@ -86,12 +86,12 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!plan(q).contains("SortMergeJoin"), s"$q regressed to sort-merge")
     }
     // ua_full's 8-way assembly, pinned by SHAPE: build() runs every
-    // corpus-grain operator itself (the weekly-stats collect, then the
-    // five metric arms' collects) and returns broadcast joins of six local
-    // relations. So the frame it returns reads no input and shuffles
-    // nothing: a FileScan or a hash exchange here means an arm went back
-    // to being a lazy subplan, and fewer than five broadcast joins means
-    // an arm lost its broadcast.
+    // corpus-grain operator itself (one concurrent wave of six metric-arm
+    // collects), joins the collected rows on the driver and returns one
+    // local relation, the top-K ratio projection folded into it. So the
+    // frame it returns plans as a local scan: a FileScan or an exchange
+    // means an arm went back to being a lazy subplan, and a join means the
+    // assembly went back to joining arms inside Spark.
     val cfg = graft.useractivity.UserActivity.Config(
       countries = graft.operators.UserActivityFull.uaCountries)
     val built = graft.useractivity.UserActivity.build(
@@ -100,10 +100,10 @@ class PlanAuditSpec extends AnyFunSuite {
       graft.operators.UserActivityFull.synthBuildhub(spark, sf),
       cfg).queryExecution.executedPlan.toString
     def count(op: String) = built.linesIterator.count(_.contains(op))
+    assert(built.trim.startsWith("LocalTableScan"), s"ua_full assembly is not a local scan:\n$built")
     assert(count("FileScan") == 0, s"ua_full assembly reads its inputs again:\n$built")
-    assert(count("Exchange hashpartitioning") == 0, s"ua_full assembly shuffles:\n$built")
-    assert(count("SortMergeJoin") == 0, s"ua_full assembly regressed to sort-merge:\n$built")
-    assert(count("BroadcastHashJoin") == 5, s"ua_full assembly lost broadcast joins:\n$built")
+    assert(count("Exchange") == 0, s"ua_full assembly shuffles:\n$built")
+    assert(count("Join") == 0, s"ua_full assembly joins inside Spark:\n$built")
   }
 
   test("rank-then-filter queries keep Spark 4's WindowGroupLimit pushdown engaged") {
@@ -621,12 +621,13 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally spark.catalog.clearCache()
   }
 
-  test("the fused weekly-stats pass aggregates mau/wau/intensity/npr in one shuffle") {
-    // one HashAggregate pair over ONE Exchange for the fused groupBy.
-    // r15: build() collects this pass into the assembly's local relation,
-    // so the ASSEMBLY's returned plan no longer contains it — the fused
-    // pass's own plan is asserted directly (it is exactly what build()
-    // executes once at construction).
+  test("the fused weekly-stats pass aggregates mau/wau/intensity/npr in one pass, without Expand") {
+    // one aggregation pass for the four CTEs: a per-client level, then the
+    // per-(week, country) level that names all four measures, two
+    // exchanges in all. build() collects this pass into the assembly's
+    // local relation, so the ASSEMBLY's returned plan no longer contains
+    // it — the fused pass's own plan is asserted directly (it is exactly
+    // what build() executes once at construction).
     val cfg = graft.useractivity.UserActivity.Config(
       countries = graft.operators.UserActivityFull.uaCountries)
     val smp = graft.useractivity.UserActivity.sample(
@@ -639,6 +640,16 @@ class PlanAuditSpec extends AnyFunSuite {
       .filter(l => l.contains("HashAggregate") || l.contains("ObjectHashAggregate"))
       .count(l => l.contains("mau") && l.contains("intensity") && l.contains("new_profile_rate"))
     assert(fusedAggs >= 1, s"fused weekly aggregate missing:\n$p")
+    assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) == 2,
+      s"fused weekly aggregate is not one per-client and one per-group shuffle:\n$p")
+    // the distinct counts of weeklyStats and hasAddon are two plain
+    // aggregations: countDistinct over two columns would plan an Expand
+    // that triples every row before the first shuffle
+    val hasAddon = graft.useractivity.UserActivity
+      .hasAddon(graft.useractivity.UserActivity.sampleAddons(smp))
+      .queryExecution.executedPlan.toString
+    for ((name, arm) <- Seq("weeklyStats" -> p, "hasAddon" -> hasAddon))
+      assert(!arm.contains("Expand"), s"$name plans an Expand:\n$arm")
     // and the assembly must consume it as a local relation, not recompute
     // it: no countDistinct-bearing aggregate may remain in the full plan
     val ua = plan("ua_full_pipeline")

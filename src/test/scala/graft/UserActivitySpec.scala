@@ -142,6 +142,165 @@ class UserActivitySpec extends AnyFunSuite {
     .build(fixture, countryNames, buildhub)
     .cache()
 
+  private val edgeCountries = UserActivity.Config(
+    countries = Seq("Worldwide", "United States", "Germany", "France"))
+
+  private def addon(id: String, name: String, system: Boolean = false): Row =
+    Row(system, false, id, name)
+
+  /** `clients_last_seen` rows from (day, days_since_seen, country,
+    * client_id, active_addons, locale); the bit fields follow
+    * days_since_seen, as in [[fixture]]. */
+  private def clients(
+      rows: Seq[(String, Integer, String, String, Seq[Row], String)]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.zipWithIndex.map {
+        case ((day, dss, cc, client, addons, locale), i) =>
+          val seen: java.lang.Long = if (dss == null) null else 1L << dss.intValue
+          Row(Date.valueOf(day), dss, cc, 1.0 + i % 5, seen, 1L << (i % 9),
+            client, "72.0", locale, 1, addons)
+      }, 2),
+      clsSchema)
+
+  /** Rows the distinct-count rewrite must count like `countDistinct`:
+    * null client ids, one client with two last-day rows in one week (one
+    * active this week, one not this month), null days_since_seen, null
+    * and empty addon arrays, one client in two countries (counted once
+    * under Worldwide), a not-last-day row and a group with no weekly
+    * active client. */
+  private def edgeCases: DataFrame = {
+    val sun = "2019-01-13"
+    val good = Seq(addon("good@x", "Good"))
+    clients(Seq(
+      (sun, 0, "US", "a", good, "en-US"),
+      (sun, 30, "US", "a", null, "en-US"),
+      (sun, 2, "US", null, good, "en-US"),
+      (sun, null, "US", "b", null, "en-US"),
+      (sun, 10, "US", "c", Seq(), "en-US"),
+      (sun, 4, "US", "h", Seq(), "en-US"),
+      (sun, 5, "DE", "d", Seq(addon("foo@testpilot-addon", "Blocked")), "de"),
+      (sun, 1, "DE", "e", good :+ addon("sys@x", "Sys", system = true), "de"),
+      (sun, null, "DE", null, null, "de"),
+      (sun, 6, "DE", "a", null, "de"),
+      ("2019-01-12", 3, "US", "f", good, "en-US"),
+      (sun, 40, "FR", "g", good, "fr"),
+      ("2019-01-20", 0, "US", "a", good, "en-US"),
+      ("2019-01-20", 27, "US", "b", null, "en-US")
+    ))
+  }
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("weeklyStats and hasAddon count distinct clients like countDistinct") {
+    val smp = UserActivity.sample(edgeCases, countryNames, edgeCountries)
+    val keys = Seq("week_start", "country_name")
+    // the reference's per-CTE forms; intensity's CTE drops groups without
+    // a weekly active row, where the fused pass reports NULL
+    val reference = UserActivity.mauWau(smp)
+      .join(UserActivity.intensity(smp), keys, "left")
+      .join(UserActivity.newProfileRate(smp), keys)
+      .select("week_start", "country_name", "mau", "wau", "intensity", "new_profile_rate")
+    val weekly = UserActivity.weeklyStats(smp)
+    assert(rowSet(weekly) == rowSet(reference))
+    val ww = weekly.filter(col("country_name") === "Worldwide" &&
+      col("week_start") === lit(Date.valueOf("2019-01-07"))).head()
+    // a, c, h, d, e are seen this month (a counted once over US and DE);
+    // a, h, d, e this week
+    assert((ww.getAs[Long]("mau"), ww.getAs[Long]("wau")) == ((5L, 4L)))
+    val addons = UserActivity.sampleAddons(smp)
+    val hasAddonReference = addons
+      .groupBy("week_start", "country_name")
+      .agg((countDistinct(when(UserActivity.countableAddon, col("client_id"))) /
+        countDistinct(col("client_id"))).as("has_addon_ratio"))
+    assert(rowSet(UserActivity.hasAddon(addons)) == rowSet(hasAddonReference))
+    assert(rowSet(UserActivity.hasAddon(addons)).size == 5)
+  }
+
+  /** The reference's top-K: rank by user_count / wau, ties by name. */
+  private def ratioRankedTopK(counts: DataFrame, wau: DataFrame, nameCol: String, k: Int) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("week_start", "country_name")
+      .orderBy(col("ratio").desc, col(nameCol).asc)
+    counts.join(wau, Seq("week_start", "country_name"))
+      .select(col("week_start"), col("country_name"), col(nameCol),
+        (col("user_count") / col("wau")).as("ratio"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .as[(Date, String, String, Double, Int)]
+      .collect()
+      .groupBy(r => (r._1, r._2))
+      .map { case (key, rs) => key -> rs.sortBy(_._5).map(r => (r._3, r._4)).toSeq }
+  }
+
+  private def entries(df: DataFrame, arr: String, nameField: String) =
+    df.select(col("submission_date"), col("country_name"),
+        transform(col(arr),
+          e => struct(e.getField(nameField).as("_1"), e.getField("ratio").as("_2"))))
+      .as[(Date, String, Seq[(String, Double)])]
+      .collect()
+      .map(r => (r._1, r._2) -> r._3)
+      .toMap
+
+  test("top_addons and top_locales rank by count exactly as the reference ranks by ratio") {
+    val sun = "2019-01-13"
+    // US: 13 addons, counts 4, 3 ×2, 2 ×7 and 1 ×3, and "Dup" is one name
+    // under two ids, so the cutoff at 10 falls inside the ties broken by
+    // name; DE has fewer entries than K for both arms
+    val usAddons = Seq(
+      "A" -> 4, "Dup" -> 3, "B" -> 3, "K" -> 2, "C" -> 2, "J" -> 2, "D" -> 2, "I" -> 2,
+      "E" -> 2, "L" -> 2, "H" -> 1, "F" -> 1, "G" -> 1)
+    val us = (0 until 5).map { c =>
+      val own = usAddons.zipWithIndex.collect {
+        case ((name, n), i) if c < n => addon(s"id$i@x", name)
+      } ++ (if (c < 2) Seq(addon("other@x", "Dup")) else Nil)
+      (sun, Integer.valueOf(c % 7), "US", s"us$c", own, Seq("en-US", "es", "fr")(c % 3))
+    }
+    val de = Seq(
+      (sun, Integer.valueOf(0), "DE", "de0", Seq(addon("z@x", "Z")), "de"),
+      (sun, Integer.valueOf(2), "DE", "de1", Seq(addon("y@x", "Y")), "en-US"))
+    val input = clients(us ++ de)
+    val built = UserActivity.build(input, countryNames, buildhub, edgeCountries)
+    val smp = UserActivity.sample(input, countryNames, edgeCountries)
+    val wau = UserActivity.weeklyStats(smp).select("week_start", "country_name", "wau")
+    val addonCounts = UserActivity.sampleAddons(smp)
+      .groupBy("week_start", "country_name", "addon_id", "addon_name")
+      .agg(countDistinct(when(UserActivity.countableAddon, col("client_id"))).as("user_count"))
+    val localeCounts = smp
+      .filter(col("days_since_seen") < 7 && col("is_last_day_of_week"))
+      .groupBy("week_start", "country_name", "locale")
+      .agg(countDistinct(col("client_id")).as("user_count"))
+    val gotAddons = entries(built, "top_addons", "addon_name")
+    val gotLocales = entries(built, "top_locales", "locale")
+    assert(gotAddons == ratioRankedTopK(addonCounts, wau, "addon_name", 10))
+    assert(gotLocales == ratioRankedTopK(localeCounts, wau, "locale", 5))
+    val usWeek = (Date.valueOf("2019-01-07"), "United States")
+    assert(gotAddons(usWeek).map(_._1) ==
+      Seq("A", "B", "Dup", "C", "D", "Dup", "E", "I", "J", "K"))
+    assert(gotAddons(usWeek).head._2 == 4.0 / 5)
+    assert(gotAddons((Date.valueOf("2019-01-07"), "Germany")).map(_._1) == Seq("Y", "Z"))
+  }
+
+  test("a group without a weekly active client id fails like the ratio form: divide by zero") {
+    // every weekly active row of France has a null client id, so wau = 0
+    val input = clients(Seq(
+      ("2019-01-13", 1, "US", "u", Seq(addon("good@x", "Good")), "en-US"),
+      ("2019-01-13", 1, "FR", null, Seq(addon("good@x", "Good")), "fr")))
+    def divideByZero(e: Throwable) =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("DIVIDE_BY_ZERO"))
+    val smp = UserActivity.sample(input, countryNames, edgeCountries)
+    val reference = intercept[Exception](ratioRankedTopK(
+      smp.filter(col("days_since_seen") < 7 && col("is_last_day_of_week"))
+        .groupBy("week_start", "country_name", "locale")
+        .agg(countDistinct(col("client_id")).as("user_count")),
+      UserActivity.weeklyStats(smp), "locale", 5))
+    assert(divideByZero(reference), reference)
+    val built = intercept[Exception](
+      UserActivity.build(input, countryNames, buildhub, edgeCountries).collect())
+    assert(divideByZero(built), built)
+  }
+
   test("pipeline produces one row per (week, country) incl Worldwide") {
     val keys = result
       .select(col("submission_date").cast("string"), col("country_name"))

@@ -621,10 +621,11 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally spark.catalog.clearCache()
   }
 
-  test("the fused weekly-stats pass aggregates mau/wau/intensity/npr in one pass, without Expand") {
+  test("the fused weekly-stats pass aggregates mau/wau/intensity/npr in one shuffle") {
     // one aggregation pass for the four CTEs: a per-client level, then the
     // per-(week, country) level that names all four measures, two
-    // exchanges in all. build() collects this pass into the assembly's
+    // exchanges in all (the name's "one shuffle" is the one pass; it is
+    // kept so the test's history stays comparable). build() collects this pass into the assembly's
     // local relation, so the ASSEMBLY's returned plan no longer contains
     // it — the fused pass's own plan is asserted directly (it is exactly
     // what build() executes once at construction).

@@ -3,6 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import scala.collection.immutable.ListMap
 import graft.export.JsonWriter
+import graft.sources.Tables
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and
   * _manifest.json, what each query did. */
@@ -54,7 +55,7 @@ object Verify {
       def seconds = math.round((System.nanoTime() - t0) / 1e6) / 1e3
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        Outcome(name, None, Some(spark.read.parquet(s"$outDir/$name").count()), seconds)
+        Outcome(name, None, Some(Tables.parquet(spark, s"$outDir/$name").count()), seconds)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Outcome(name, Some(String.valueOf(e.getMessage)), None, seconds)

@@ -26,8 +26,10 @@ object Annotations {
 
   /** The version-release spine (annotations.py:34-72): weekly days from
     * 2018-12-31 to dateTo, as-of joined to release builds (J5), MAX major
-    * version per day, then MIN day per version, day-desc. All Spark:
-    * sequence+explode spine, broadcast range join, two groupBys. */
+    * version per day, then MIN day per version. All Spark: sequence+explode
+    * spine, broadcast range join, two groupBys. Unordered: the result is
+    * one row per major version, and its consumer orders it day-desc on the
+    * driver ([[fxhealthAnnotations]]). */
   def versionReleaseDays(
       spark: SparkSession,
       buildhub: DataFrame,
@@ -58,11 +60,11 @@ object Annotations {
       .agg(max("v").as("version"))
       .groupBy("version")
       .agg(min(date_format(col("day"), "yyyy-MM-dd")).as("day"))
-      .orderBy(col("day").desc)
   }
 
   /** Country fan-out (annotations.py:77-85): every (version, day) row
-    * annotated into every country's series. */
+    * annotated into every country's series, day-desc. The rows are sorted
+    * after the collect: a Spark sort of them ran its own jobs. */
   def fxhealthAnnotations(
       versionDays: DataFrame,
       countries: Seq[String]
@@ -71,6 +73,7 @@ object Annotations {
       .select("day", "version")
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
+      .sortBy(_._1)(Ordering[String].reverse)
     countries.map { c =>
       c -> rows.toSeq.map { case (day, v) =>
         day -> Map("pct_latest_version" -> s"FF$v")

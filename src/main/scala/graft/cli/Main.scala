@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.annotations.Annotations
 import graft.export.{JsonExport, JsonWriter}
 import graft.hardware.HardwareReport
-import graft.sources.DeviceMap
+import graft.sources.{DeviceMap, Tables}
 import graft.useractivity.{CountryList, UserActivity}
 
 /** CLI mirroring the reference's three jobs (`public_data_report/cli.py`):
@@ -153,11 +153,11 @@ object Main {
     * write; then readback, flatten, JSON export. An empty window fails
     * the job before any partition is written. */
   def hardwareReport(spark: SparkSession, opts: Map[String, String]): Unit = {
-    val input = spark.read.parquet(opts("input"))
+    val input = Tables.parquet(spark, opts("input"))
     val out = opts("output")
     val weeks = opts.getOrElse("past_weeks", "0").toInt
     val dateFrom = java.time.LocalDate.parse(opts("date_from"))
-    val deviceMap = DeviceMap.toLookup(DeviceMap.load(spark))
+    val deviceMap = DeviceMap.lookup()
     val windows = (0 to weeks).map { w =>
       val from = dateFrom.minusWeeks(w.toLong)
       (java.sql.Date.valueOf(from), java.sql.Date.valueOf(from.plusDays(7)))
@@ -173,15 +173,14 @@ object Main {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date_from")
       .parquet(s"$out/hardware_aggregates")
-    val readback = spark.read.parquet(s"$out/hardware_aggregates").orderBy("date_from")
-    val flat = HardwareReport.flatten(readback).collect()
+    val flat = HardwareReport.flatten(Tables.parquet(spark, s"$out/hardware_aggregates"))
     val byDate = flat
-      .groupBy(_.getString(0))
+      .groupBy(_._1)
       .toSeq
       .sortBy(_._1)(Ordering[String].reverse)
       .map { case (date, rows) =>
         scala.collection.immutable.ListMap(
-          (rows.map(r => r.getString(1) -> (r.getDouble(2): Any)) :+
+          (rows.map { case (_, key, ratio) => key -> (ratio: Any) } :+
             ("date" -> (date: Any))): _*
         )
       }
@@ -213,9 +212,9 @@ object Main {
       override_.getOrElse(CountryList.userActivityCountryList)
     val cfg = UserActivity.Config(countries = exportCountries)
     val result = UserActivity.build(
-      spark.read.parquet(opts("clients")),
-      spark.read.parquet(opts("country_names")),
-      spark.read.parquet(opts("buildhub")),
+      Tables.parquet(spark, opts("clients")),
+      Tables.parquet(spark, opts("country_names")),
+      Tables.parquet(spark, opts("buildhub")),
       cfg
     )
     val out = opts("output")
@@ -251,7 +250,7 @@ object Main {
     val countries = CountryList.userActivityCountryList
     val vd = Annotations.versionReleaseDays(
       spark,
-      spark.read.parquet(opts("buildhub")),
+      Tables.parquet(spark, opts("buildhub")),
       dateTo
     )
     val fx = Annotations.fxhealthAnnotations(vd, countries)

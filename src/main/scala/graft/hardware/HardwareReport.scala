@@ -2,6 +2,7 @@ package graft.hardware
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.F
 
 /** The hardware-survey pipeline — the Spark re-expression of
@@ -80,7 +81,8 @@ object HardwareReport {
     *     re-exported stale JSON as if fresh (a typo'd --date_from, or an
     *     input table that hasn't landed yet);
     *   - each week's threshold is the driver's `int(total * 0.01)` (:442),
-    *     carried with its sample count in a broadcast local relation;
+    *     carried with its sample count in a literal lookup keyed by the
+    *     window (a broadcast join of a local relation ran a job of its own);
     *   - aggregate, decode and collapse then run once over every window.
     *
     * The caller writes the result once with `partitionBy("date_from")` +
@@ -107,12 +109,9 @@ object HardwareReport {
     val totals = windows.map { case (from, to) =>
       val n = counted.getOrElse((from.toLocalDate, to.toLocalDate), 0L)
       require(n > 0L, s"No data in input for $from to $to")
-      (from, to, n, (n * 0.01).toLong)
-    }
-    collapseBuckets(
-      aggregateDimensions(inWindows, deviceMap),
-      input.sparkSession.createDataFrame(totals).toDF(windowCols ++ Seq("sample_count", "threshold"): _*)
-    )
+      (from, to) -> (n, (n * 0.01).toLong)
+    }.toMap
+    collapseBuckets(aggregateDimensions(inWindows, deviceMap), totals)
   }
 
   /** One-pass multi-dimension aggregation (A3): decode dimensions as
@@ -179,16 +178,23 @@ object HardwareReport {
     *     uncollapsed dims (has_flash, os_arch), and `os` first folds to
     *     "<osname>-Other" and only in a second pass to global Other;
     *   - every count is normalized by the week's `sample_count`.
-    * `totals` holds one (date_from, date_to, sample_count, threshold) row
-    * per week; it is tiny and broadcast. Expressed as two groupBy rounds
-    * over the long format, each keyed by the week as well.
+    * `totals` maps every (date_from, date_to) window of `longDf` to its
+    * (sample_count, threshold); it is looked up as a literal map. Expressed
+    * as two groupBy rounds over the long format, each keyed by the week as
+    * well.
     */
-  def collapseBuckets(longDf: DataFrame, totals: DataFrame): DataFrame = {
+  def collapseBuckets(
+      longDf: DataFrame,
+      totals: Map[(java.sql.Date, java.sql.Date), (Long, Long)]
+  ): DataFrame = {
     val uncollapsed = Seq("has_flash", "os_arch")
     val week = (windowCols ++ Seq("sample_count", "threshold")).map(col)
     val threshold = col("threshold")
+    val weekTotals =
+      element_at(typedlit(totals), struct(col("date_from").as("_1"), col("date_to").as("_2")))
     val pass1 = longDf
-      .join(broadcast(totals), windowCols)
+      .withColumn("sample_count", weekTotals("_1"))
+      .withColumn("threshold", weekTotals("_2"))
       .withColumn(
         "key1",
         when(col("dimension") === "resolution" && col("key") === "0x0", lit("Other"))
@@ -226,8 +232,8 @@ object HardwareReport {
 
   /** Long -> wide flatten for export (`flatten_aggregates`,
     * hardware_report.py:327-350): prefix-translated keys, one record per
-    * date, date-desc order. Returns (date, json_key, ratio) — the JSON
-    * writer pivots the (tiny) collected result.
+    * date, date-desc order. Returns the collected (date, json_key, ratio)
+    * rows, date-desc then key — the JSON writer pivots the (tiny) result.
     */
   val keyPrefixes: Map[String, String] = Map(
     "browser_arch" -> "browserArch_",
@@ -243,15 +249,22 @@ object HardwareReport {
     "has_flash" -> "hasFlash_"
   )
 
-  def flatten(readback: DataFrame): DataFrame = {
+  def flatten(readback: DataFrame): Seq[(String, String, Double)] = {
     val prefix = typedlit(keyPrefixes)
-    readback
-      .withColumn("flat_key", concat(element_at(prefix, col("dimension")), col("key")))
+    val rows = readback
       .select(
-        date_format(col("date_from"), "yyyy-MM-dd").as("date"),
-        col("flat_key"),
+        date_format(col("date_from"), "yyyy-MM-dd"),
+        concat(element_at(prefix, col("dimension")), col("key")),
         col("ratio")
       )
-      .orderBy(col("date").desc, col("flat_key"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+    // the rows are collected anyway, so they sort here rather than in a
+    // Spark sort (a sampling job plus a sort stage); flat keys compare as
+    // Spark compares strings (binary UTF-8), which the JSON key order
+    // has always followed
+    val binary: Ordering[UTF8String] = _ compareTo _
+    rows.toSeq.sortBy(r => (r._1, UTF8String.fromString(r._2)))(
+      Ordering.Tuple2(Ordering[String].reverse, binary))
   }
 }

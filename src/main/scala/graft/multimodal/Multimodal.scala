@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Multimodal-column support: opaque binary payloads + typed metadata, with
   * batched decode/feature-extraction plumbing.
@@ -90,7 +91,7 @@ object Multimodal {
     * reproduces it exactly (ASCII corpus: byte slicing == char slicing).
     */
   def frameSampleQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     withPayload(docs)
       .withColumn("n_bytes", length(col("payload")).cast("long"))
       .withColumn("n_frames", (lit(1) + col("n_bytes") % 8).cast("int"))
@@ -133,7 +134,7 @@ object Multimodal {
     * the plan; the DuckDB oracle reproduces the stub exactly (ASCII
     * corpus: byte slicing == char slicing). */
   def resizeQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     withPayload(docs)
       .withColumn("n_bytes", length(col("payload")).cast("long"))
       // coalesce(0): an empty payload has no first byte — the stub decoder
@@ -177,7 +178,7 @@ object Multimodal {
     * real feature-extraction pipeline feeds into dedup/quality filters.
     */
   def metaQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     decode(withPayload(docs))
       .groupBy("format", "nFrames")
       .agg(
@@ -212,7 +213,7 @@ object MultimodalOps {
     * one keyed join on the chunk hash, one pair-count shuffle. Payload
     * bytes are read once in the scan stage; only 16-byte hashes travel. */
   def chunkDedupQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     chunkPairs(Multimodal.withPayload(docs))
   }
 
@@ -298,7 +299,7 @@ object MultimodalOps {
     * expression without touching the pair machinery. */
   def frameDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     val frameSize = 32
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val frames = Multimodal
       .withPayload(docs)
       .withColumn(
@@ -337,7 +338,7 @@ object MultimodalOps {
     * pattern) without touching the retrieval plan. */
   def featureAnnQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     // featurization is ONE fused native expression (graft_byte_embed:
     // all 64 byte reads + scaling in a single codegen loop) — the
     // composed form was 64 conv(hex(substring)) columns, each a per-byte
@@ -410,7 +411,7 @@ object MultimodalOps {
     * exact baseline the m7b gate compares against. */
   def semanticDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val emb = Multimodal
       .withPayload(docs)
       .filter(length(col("payload")) > 0)
@@ -468,7 +469,7 @@ object MultimodalOps {
     * discipline t41 uses for signatures. */
   def semanticDedupBandedQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val emb = gramEmbeddings(docs).cache()
     // candidate budget 256/vec, not 32: the verify is one codegen dot
     // per candidate row, so trading a fatter (still linear) candidate
@@ -530,7 +531,7 @@ object MultimodalOps {
       scratch: Option[String] = None
   ): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val emb = gramEmbeddings(docs).cache()
     val nVecs = emb.count()
     val (nBands, bandBits) =
@@ -622,7 +623,7 @@ object MultimodalOps {
       if (nVecs * (hi - lo) > gcSigRows) System.gc()
       s += 1
     }
-    val res = spark.read.parquet(out).distinct().orderBy("id_a", "id_b")
+    val res = Tables.parquet(spark, out).distinct().orderBy("id_a", "id_b")
     if (scratch.isDefined) res
     else {
       // self-created temp dir: pin the survivors off it (they are tiny
@@ -697,7 +698,7 @@ object MultimodalOps {
       probes: Int
   ): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val emb = gramEmbeddings(docs).cache()
     val n = emb.count()
     // floor 32 = 8× the probe fan-out, NOT 4: with nLists ≤ probes every
@@ -789,7 +790,7 @@ object MultimodalOps {
     * dedup itself would use. */
   def ivfProbeDecisionQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val emb = gramEmbeddings(docs).cache()
     try {
       val n = emb.count()
@@ -1093,7 +1094,7 @@ object MultimodalOps {
   def crossModalSearchQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(spark, dir)
     val media = gramEmbeddings(docs)
     val qs = crossModalQueries
       .toDF("qid", "qtext")

@@ -247,6 +247,7 @@ object RelationalOps {
       )
     graft.annotations.Annotations
       .versionReleaseDays(s, buildhub, java.sql.Date.valueOf("2020-06-30"))
+      .orderBy(col("day").desc)
   }
 
   /** J4's big-to-big scale path: as-of join via UNION + WINDOW. The

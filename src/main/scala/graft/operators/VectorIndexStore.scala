@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.sources.Tables
 
 /** Materialized IVF index store — the ANN analogue of
   * [[graft.export.ShardStore]]: v6/v10 rebuild their inverted-file index
@@ -105,7 +106,7 @@ object VectorIndexStore {
     val hasDelta = fs.exists(root) &&
       fs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
     val index =
-      if (hasDelta) base.unionByName(spark.read.parquet(deltaDir).select(serving: _*))
+      if (hasDelta) base.unionByName(Tables.parquet(spark, deltaDir).select(serving: _*))
       else base
     probeIndex(spark, s"${table}_centroids", withoutTombstones(spark, table, index), queries)
   }
@@ -205,7 +206,7 @@ object VectorIndexStore {
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val hasEpochs = fs.exists(root) &&
           fs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-        if (hasEpochs) Some(spark.read.parquet(dir).select("vec_id")) else None
+        if (hasEpochs) Some(Tables.parquet(spark, dir).select("vec_id")) else None
       }
       .reduceOption(_ unionByName _)
     // survivors = tomb ∩ delta; must be STAGED before the rewrite (and
@@ -242,7 +243,7 @@ object VectorIndexStore {
         .write
         .mode("overwrite")
         .parquet(staging.toString)
-      val survivors = spark.read.parquet(staging.toString)
+      val survivors = Tables.parquet(spark, staging.toString)
       val liveCids = survivors.select("cid").distinct().collect().map(_.getInt(0)).toSet
       // insertInto (NOT saveAsTable): saveAsTable-overwrite replaces the
       // whole table; insertInto under dynamic partition overwrite rewrites
@@ -278,8 +279,7 @@ object VectorIndexStore {
     // Residual boundary is compact's, stated there: a crash INSIDE the
     // insert can leave partial survivor data — run purge from a single
     // maintenance job.
-    spark.read
-      .parquet(tombStaging.toString)
+    Tables.parquet(spark, tombStaging.toString)
       .write
       .mode("overwrite")
       .insertInto(s"${table}_tombstones")
@@ -405,7 +405,7 @@ object VectorIndexStore {
           val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val hasEpochs = fs.exists(root) &&
             fs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-          if (hasEpochs) Some(spark.read.parquet(dir).select("vec_id")) else None
+          if (hasEpochs) Some(Tables.parquet(spark, dir).select("vec_id")) else None
         }
         .reduceOption(_ unionByName _)
       val guarded = deltaResidents match {
@@ -493,8 +493,7 @@ object VectorIndexStore {
         val hasEpochs = dfs.exists(root) &&
           dfs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
         if (hasEpochs)
-          spark.read
-            .parquet(deltaDir)
+          Tables.parquet(spark, deltaDir)
             .filter(col("epoch") =!= epoch)
             .select("vec_id")
         else indexed.select("vec_id").limit(0)
@@ -554,8 +553,7 @@ object VectorIndexStore {
     val dw = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id")
       .orderBy(col("epoch").desc)
-    val folded = spark.read
-      .parquet(deltaDir)
+    val folded = Tables.parquet(spark, deltaDir)
       .filter(col("epoch").isin(epochs.map(java.lang.Long.valueOf): _*))
       .withColumn("rn", row_number().over(dw))
       .filter(col("rn") === 1)
@@ -785,8 +783,7 @@ object VectorIndexStore {
       val prevPom = spark.conf.get(pomKey, "STATIC")
       spark.conf.set(pomKey, "dynamic")
       try {
-        spark.read
-          .parquet(staging.toString)
+        Tables.parquet(spark, staging.toString)
           .write
           .mode("overwrite")
           .insertInto(table)

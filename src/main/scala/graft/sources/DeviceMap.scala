@@ -1,7 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 
 /** GPU device-map source + inversion — the Spark re-expression of the
   * reference's HTTP JSON fetch + `invert_device_map`
@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   *
   *   vendor id -> device family -> chipset -> [device ids]
   *
-  * and the consumer needs vendor+device -> (family, chipset). The inversion
-  * is a from_json into nested maps + three explodes — a DataFrame, not a
-  * driver dict walk, so a million-device map would invert distributed.
+  * and the consumer needs vendor+device -> (family, chipset). The map is a
+  * few hundred bytes and its consumer is a literal-map lookup
+  * ([[graft.hardware.HardwareReport.deviceFamilyChipset]]), so it is parsed
+  * and inverted on the driver with Jackson (shipped with Spark): a
+  * DataFrame inversion ran a Spark job only to collect the same map.
   */
 object DeviceMap {
 
@@ -23,51 +25,16 @@ object DeviceMap {
     finally in.close()
   }
 
-  /** Parse + invert: one row per (gfx0_vendor_id, gfx0_device_id) with its
-    * family and chipset, ids '0x'-prefixed like the reference
-    * (hardware_report.py:180-184). */
-  def load(
-      spark: SparkSession,
-      resource: String = "/graft/device_map.json"
-  ): DataFrame = {
-    import spark.implicits._
-    val raw = Seq(readResourceText(resource)).toDF("json")
-    raw
-      .select(
-        from_json(
-          col("json"),
-          org.apache.spark.sql.types.DataType.fromDDL(
-            "map<string,map<string,map<string,array<string>>>>"
-          )
-        ).as("m")
-      )
-      .select(explode(col("m")).as(Seq("vendor", "families")))
-      .select(col("vendor"), explode(col("families")).as(Seq("family", "chipsets")))
-      .select(
-        col("vendor"),
-        col("family"),
-        explode(col("chipsets")).as(Seq("chipset", "ids"))
-      )
-      .select(
-        concat(lit("0x"), col("vendor")).as("gfx0_vendor_id"),
-        explode(col("ids")).as("raw_id"),
-        col("family"),
-        col("chipset")
-      )
-      .select(
-        col("gfx0_vendor_id"),
-        concat(lit("0x"), col("raw_id")).as("gfx0_device_id"),
-        col("family"),
-        col("chipset")
-      )
+  /** Parse + invert: (family, chipset) per "vendor|device" key, ids
+    * '0x'-prefixed like the reference (hardware_report.py:180-184), keyed
+    * as consumed by HardwareReport.deviceFamilyChipset. */
+  def lookup(resource: String = "/graft/device_map.json"): Map[String, (String, String)] = {
+    val vendors = new ObjectMapper().readTree(readResourceText(resource))
+    (for {
+      vendor <- vendors.properties.asScala
+      family <- vendor.getValue.properties.asScala
+      chipset <- family.getValue.properties.asScala
+      id <- chipset.getValue.asScala
+    } yield s"0x${vendor.getKey}|0x${id.asText}" -> (family.getKey, chipset.getKey)).toMap
   }
-
-  /** Collect the (small) inverted map for literal-lookup decode — keyed
-    * "vendor|device" as consumed by HardwareReport.deviceFamilyChipset. */
-  def toLookup(df: DataFrame): Map[String, (String, String)] =
-    df.collect()
-      .map { r =>
-        s"${r.getString(0)}|${r.getString(1)}" -> (r.getString(2), r.getString(3))
-      }
-      .toMap
 }

@@ -86,7 +86,7 @@ object Schemas {
     * compatible types; extra columns are tolerated (schema evolution),
     * missing/mistyped ones fail with a full diff. */
   def validated(spark: SparkSession, path: String, expected: StructType): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
     val actual = df.schema.map(f => f.name -> f.dataType).toMap
     val problems = expected.flatMap { f =>
       actual.get(f.name) match {

@@ -151,7 +151,7 @@ object WarehouseStore {
           "a concurrent writer tore it; remove the directory and rerun"
       )
     }
-    s.read.parquet(store.toString)
+    graft.sources.Tables.parquet(s, store.toString)
   }
 
   /** Inventory of the stores whose names start with `prefix` (default:

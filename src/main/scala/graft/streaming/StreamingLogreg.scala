@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.VectorOps
+import graft.sources.Tables
 
 /** Streaming mini-batch SGD for the v35 logistic-regression trainer —
   * the 22nd streaming module, and the LEARNING analogue of the
@@ -61,8 +62,7 @@ object StreamingLogreg {
     locally {
       val dir = new java.io.File(ledgerDir)
       if (dir.isDirectory && dir.listFiles().exists(_.getName.endsWith(".parquet"))) {
-        val last = spark.read
-          .parquet(ledgerDir)
+        val last = Tables.parquet(spark, ledgerDir)
           .orderBy(col("batch_id").desc)
           .limit(1)
           .collect()

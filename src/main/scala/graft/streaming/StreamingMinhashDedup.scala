@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TextOps
+import graft.sources.Tables
 
 /** Continuous near-dup dedup against a PERSISTED MinHash signature index —
   * the streaming form of t41, the way a production ingestion pipeline
@@ -60,8 +61,7 @@ object StreamingMinhashDedup {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(path))
-      spark.read
-        .parquet(dir)
+      Tables.parquet(spark, dir)
         .filter(col("epoch") =!= lit(excludeEpoch))
         .select(col("doc_id").as("old_id"), col("band"), col("bkey"))
     else

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.multimodal.MultimodalOps
+import graft.sources.Tables
 
 /** Continuous SEMANTIC media dedup against a persisted band-signature
   * index — the streaming form of m7b, and the embedding-space sibling of
@@ -77,8 +78,7 @@ object StreamingSemanticDedup {
     import spark.implicits._
     val (f, p) = fs(spark, s"$dir/bands")
     if (f.exists(p))
-      spark.read
-        .parquet(s"$dir/bands")
+      Tables.parquet(spark, s"$dir/bands")
         .filter(col("epoch") =!= lit(excludeEpoch))
         .select(col("vec_id").as("old_id"), col("band"), col("bh"))
     else Seq.empty[(Long, Int, Long)].toDF("old_id", "band", "bh")
@@ -95,8 +95,7 @@ object StreamingSemanticDedup {
   ): DataFrame = {
     val (f, p) = fs(spark, s"$dir/vecs")
     if (f.exists(p))
-      spark.read
-        .parquet(s"$dir/vecs")
+      Tables.parquet(spark, s"$dir/vecs")
         .filter(col("epoch") =!= lit(excludeEpoch))
         .select(col("vec_id").as("old_id"), col("embedding"), col("nrm"))
     else {

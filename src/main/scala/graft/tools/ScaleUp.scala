@@ -145,11 +145,11 @@ object ScaleUp {
         java.nio.file.Files.delete(link)
     }
     if (selected("documents"))
-      scaledDocuments(spark.read.parquet(s"$base/documents.parquet"), replicas)
+      scaledDocuments(graft.sources.Tables.documents(spark, base), replicas)
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
     if (selected("embeddings"))
-      scaledEmbeddings(spark.read.parquet(s"$base/embeddings.parquet"), replicas)
+      scaledEmbeddings(graft.sources.Tables.embeddings(spark, base), replicas)
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     // through Tables.events, not a raw read: events.ts has shipped as
@@ -161,11 +161,11 @@ object ScaleUp {
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/events.parquet")
     if (selected("orders"))
-      scaledOrders(spark.read.parquet(s"$base/orders.parquet"), replicas)
+      scaledOrders(graft.sources.Tables.orders(spark, base), replicas)
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/orders.parquet")
     if (selected("lineitem"))
-      scaledLineitem(spark.read.parquet(s"$base/lineitem.parquet"), replicas)
+      scaledLineitem(graft.sources.Tables.lineitem(spark, base), replicas)
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
 

@@ -17,12 +17,15 @@ class CliSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("device map inverts like the reference (tests/test_hardware_report.py:50-66)") {
-    val df = DeviceMap.load(spark)
-    val lookup = DeviceMap.toLookup(df)
+    // inverted on the driver: no session, no Spark job
+    val lookup = DeviceMap.lookup()
+    // one entry per device id of the packaged map (2 vendors, 7 devices)
+    assert(lookup.size == 7)
     // vendor ids are 0x-prefixed, device ids resolve to (family, chipset)
     assert(lookup("0x10de|0x13c1") == ("Maxwell", "GM204"))
     assert(lookup("0x10de|0x13d7") == ("Maxwell", "GM204M"))
     assert(lookup("0x8086|0x1912") == ("Gen9", "Skylake"))
+    assert(lookup("0x10de|0x1b02") == ("Pascal", "GP102"))
     assert(!lookup.contains("0x10de|0xdead"))
   }
 
@@ -116,6 +119,21 @@ class CliSpec extends AnyFunSuite {
     // dynamic overwrite is an option of the job's write, not a session conf
     val mode = org.apache.spark.sql.internal.SQLConf.PARTITION_OVERWRITE_MODE
     assert(spark.conf.get(mode.key) == mode.defaultValueString)
+  }
+
+  test("hardware_report runs a fixed number of Spark jobs") {
+    // no schema job for the two parquet reads, none to invert the device
+    // map, no broadcast of the weekly totals and no sort of the readback:
+    // what is left is the window totals (2 jobs), the write (4) and the
+    // readback's collect (1)
+    val tmp = Files.createTempDirectory("graft-hw-jobs").toString
+    hardwareInput(s"$tmp/input", Seq("2020-01-13", "2020-01-06"))
+    val jobs = TestSpark.jobStarts {
+      Main.hardwareReport(spark, Map(
+        "input" -> s"$tmp/input", "date_from" -> "2020-01-13",
+        "past_weeks" -> "1", "output" -> s"$tmp/out"))
+    }.size
+    assert(jobs == 7, s"hardware_report ran $jobs Spark jobs")
   }
 
   test("hardware_report runs as many SQL executions for four weeks as for one") {
@@ -355,21 +373,12 @@ class CliSpec extends AnyFunSuite {
     // partition wait for one build). How many arms get there first is a
     // race, so those jobs are counted apart: an arm collected on its own
     // before the others leaves exactly one.
+    // Its three input reads run no schema job (Tables.parquet reads the
+    // footers on the driver).
     val tmp = Files.createTempDirectory("graft-ua-jobs").toString
     new UserActivitySpec().writeFixtures(spark, tmp)
-    var jobs, cacheJobs = 0 // the listener bus calls back on one thread
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      // a cache-materializing job is one stage whose own RDD (the head of
-      // its RDD infos) is the persisted one
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.stageInfos.size == 1 && e.stageInfos.head.rddInfos.head.storageLevel.isValid)
-          cacheJobs += 1
-        else jobs += 1
-    }
     spark.catalog.clearCache()
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val started = TestSpark.jobStarts {
       Main.userActivity(spark, Map(
         "clients" -> s"$tmp/clients",
         "country_names" -> s"$tmp/countries",
@@ -378,9 +387,13 @@ class CliSpec extends AnyFunSuite {
         "output" -> s"$tmp/out",
         "archive_date" -> "2020-06-29"
       ))
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs == 28, s"user_activity ran $jobs Spark jobs besides its $cacheJobs cache jobs")
+    }
+    // a cache-materializing job is one stage whose own RDD (the head of
+    // its RDD infos) is the persisted one
+    val cacheJobs = started.count(e =>
+      e.stageInfos.size == 1 && e.stageInfos.head.rddInfos.head.storageLevel.isValid)
+    val jobs = started.size - cacheJobs
+    assert(jobs == 25, s"user_activity ran $jobs Spark jobs besides its $cacheJobs cache jobs")
     assert(cacheJobs >= 2, s"only $cacheJobs arm started before the sample was cached")
   }
 

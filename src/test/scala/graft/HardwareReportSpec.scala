@@ -26,9 +26,9 @@ class HardwareReportSpec extends AnyFunSuite {
   private def inWeek(df: org.apache.spark.sql.DataFrame, w: (java.sql.Date, java.sql.Date)) =
     df.withColumn("date_from", lit(w._1)).withColumn("date_to", lit(w._2))
 
-  /** One week's (date_from, date_to, sample_count, threshold) row. */
+  /** One week's (sample_count, threshold), keyed by its window. */
   private def totals(w: (java.sql.Date, java.sql.Date), n: Long, threshold: Long) =
-    Seq((w._1, w._2, n, threshold)).toDF("date_from", "date_to", "sample_count", "threshold")
+    Map(w -> (n, threshold))
 
   /** The 6-client synthetic of test_transform_dimensions (:90-140),
     * expressed as the per-combo joint table our pipeline consumes. Client 1
@@ -126,13 +126,21 @@ class HardwareReportSpec extends AnyFunSuite {
   }
 
   test("flatten produces prefixed keys date-desc (:327-358)") {
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes (EF.. < F0..), the order
+    // Spark's string sort gave the artifact, but after it in UTF-16 code
+    // units (FF21 > D83D), the order of String.compareTo
+    val (fullwidthA, emoji) = ("\uFF21", "\uD83D\uDE00")
     val readback = Seq(
       (java.sql.Date.valueOf("2020-01-06"), "os", "Windows_NT-10.0", 0.9),
-      (java.sql.Date.valueOf("2020-01-13"), "memory_gb", "16", 0.4)
+      (java.sql.Date.valueOf("2020-01-13"), "memory_gb", "16", 0.4),
+      (java.sql.Date.valueOf("2020-01-13"), "os", emoji, 0.1),
+      (java.sql.Date.valueOf("2020-01-13"), "os", fullwidthA, 0.2)
     ).toDF("date_from", "dimension", "key", "ratio")
-    val out = HardwareReport.flatten(readback).collect()
-    assert(out.map(_.getString(0)).sameElements(Array("2020-01-13", "2020-01-06")))
-    assert(out.map(_.getString(1)).sameElements(Array("ram_16", "osName_Windows_NT-10.0")))
+    val out = HardwareReport.flatten(readback)
+    assert(out.map(_._1) == Seq("2020-01-13", "2020-01-13", "2020-01-13", "2020-01-06"))
+    assert(out.map(_._2) ==
+      Seq(s"osName_$fullwidthA", s"osName_$emoji", "ram_16", "osName_Windows_NT-10.0"))
+    assert(out.map(_._3) == Seq(0.2, 0.1, 0.4, 0.9))
   }
 
   test("NULL telemetry values become distinct 'None' buckets like Python's str(metric) (:318-321)") {
@@ -165,8 +173,8 @@ class HardwareReportSpec extends AnyFunSuite {
     val flat = HardwareReport.flatten(
       Seq((java.sql.Date.valueOf("2020-01-06"), "resolution", "None", 0.4))
         .toDF("date_from", "dimension", "key", "ratio")
-    ).collect()
-    assert(flat(0).getString(1) == "resolution_None")
+    )
+    assert(flat.head._2 == "resolution_None")
   }
 
   /** Three weeks of the golden combos with different totals: the

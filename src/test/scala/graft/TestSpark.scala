@@ -12,4 +12,21 @@ object TestSpark {
       warehouseDir =
         Some(java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     )
+
+  /** The Spark jobs started while `body` runs. */
+  def jobStarts(body: => Unit): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    val started = Seq.newBuilder[org.apache.spark.scheduler.SparkListenerJobStart]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      // the listener bus calls back on one thread
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started += e
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    started.result()
+  }
 }

@@ -14,7 +14,13 @@ import org.apache.spark.sql.SparkSession
   *   - `spark.sql.codegen.fallback=false`: a whole-stage codegen compile
   *     error fails the query instead of silently running interpreted. The
   *     silent fallback once hid the graft_dot freshName collision for two
-  *     rounds and cost m7 2.1× (SCALING.md round 9b).
+  *     rounds and cost m7 2.1× (SCALING.md round 9b);
+  *   - `spark.sql.legacy.parquet.nanosAsLong=true`: older testdata
+  *     generations store `events.ts` as parquet TIMESTAMP(NANOS), which
+  *     Spark otherwise refuses to read. `Tables.events` reads it as a
+  *     nanosecond long and converts it; graft never sets the conf on a
+  *     session it did not build. Data without NANOS columns reads the
+  *     same either way.
   *
   * Job-specific write modes are not part of the recipe: the hardware job
   * asks for dynamic partition overwrite on its own write.
@@ -41,6 +47,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.fallback", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     val spark = warehouseDir
       .fold(builder)(builder.config("spark.sql.warehouse.dir", _))
       .getOrCreate()

@@ -524,6 +524,42 @@ object MultimodalOps {
     // signature volume actually threatens scratch, then grows with it.
     semanticDedupBandedSharded(spark, dir, shards = 0)
 
+  /** m7e's target signature rows (vectors × band slice — what drives
+    * per-group exchange bytes, same quantity the gc gate reads) per band
+    * group, at the MEASURED wall-clock optimum. Two opposing costs
+    * (round-14 sweep, one box): per-group FIXED cost ≈ the full plane-dot
+    * pass every group re-runs (~10 s at sf1) pushes groups down; the
+    * one-shot's exchange degradation pushes them up — at sf1's ~24M
+    * signature rows the sweep read 1 group 105–120 s, 2 groups 35 s,
+    * 4 groups 61 s, 8 groups 97 s, so the budget is ~12M rows/group
+    * (also ≈ the gc gate's provenance volume). The 16-group cap bounds
+    * the repeated plane-dot scans at corpus scale: sf30's ~1.3e9 rows cap
+    * at 16 × ~81M rows/group ≈ half the per-group volume round 11
+    * measured disk-safe at 8 shards (SCALING.md), instead of solving to
+    * ~108 groups of redundant featurize-side work. sf0.1 (~1.5M rows)
+    * still solves to 1 group — measured 11.5 → 5.3 s vs the old
+    * constant 4. */
+  private val M7eGroupSigRows = 12000000L
+
+  /** The 16-group cap bounds redundant plane-dot passes, but the sharding
+    * exists to bound per-group scratch DISK: when 16 groups would still
+    * exceed the measured disk-safe per-group row volume (~163M sig rows
+    * at 8 shards of the sf30 run, round 11), the cap yields to the disk
+    * bound instead of re-creating the one-shot spill failure at ~2× sf30. */
+  private val M7eMaxGroupSigRows = 160000000L
+
+  /** Signature rows in one band group above which m7e forces a GC after
+    * the group's write, so the ContextCleaner drops its shuffle files
+    * before the next group spills. Gated on the group's SIGNATURE-ROW
+    * volume (vectors × bands in the group), which actually drives
+    * per-group exchange bytes — a plain corpus-size gate missed that a
+    * sub-threshold corpus with a wide solved geometry re-creates the
+    * disk accumulation the gc exists to bound. 8M signature rows is the
+    * old 1M-vector gate at the typical ~8-band group. At test-fixture
+    * scale the old always-on gc was 6 forced full GCs per bench run for
+    * shuffle files measured in megabytes. */
+  private val M7eGcSigRows = 8000000L
+
   private[graft] def semanticDedupBandedSharded(
       spark: SparkSession,
       dir: String,
@@ -542,51 +578,20 @@ object MultimodalOps {
         maxMiss = 1e-6
       )
     // adaptive group count: groups sized so ONE group's signature rows
-    // (vectors × its band slice — the driver of per-group exchange
-    // bytes, same quantity the gc gate reads) sit at the MEASURED
-    // wall-clock optimum. Two opposing costs (round-14 sweep, this box):
-    // per-group FIXED cost ≈ the full plane-dot pass every group re-runs
-    // (~10 s at sf1) pushes groups down; the one-shot's exchange
-    // degradation pushes them up — at sf1's ~24M signature rows the
-    // sweep read 1 group 105–120 s, 2 groups 35 s, 4 groups 61 s,
-    // 8 groups 97 s, so the default budget is ~12M rows/group (also
-    // ≈ the gc gate's provenance volume). The 16-group cap bounds the
-    // repeated plane-dot scans at corpus scale: sf30's ~1.3e9 rows cap
-    // at 16 × ~81M rows/group ≈ half the per-group volume round 11
-    // measured disk-safe at 8 shards (SCALING.md), instead of solving
-    // to ~108 groups of redundant featurize-side work. sf0.1 (~1.5M
-    // rows) still solves to 1 group — measured 11.5 → 5.3 s vs the old
-    // constant 4. Tunable per deployment via
-    // spark.graft.m7e.groupSigRows.
+    // sit at the measured optimum (M7eGroupSigRows), capped at 16 groups
+    // unless that would break the disk-safe bound (M7eMaxGroupSigRows)
     val nGroups =
       if (shards > 0) shards
       else {
-        // conf reads degrade, never throw (r14 advice #2): a non-numeric
-        // value falls back to the measured default, a zero/negative one
-        // clamps to 1 — a bad knob must not fail the query at runtime
-        def confRows(key: String, dflt: Long): Long = spark.conf
-          .getOption(key)
-          .flatMap(v => scala.util.Try(v.toLong).toOption)
-          .map(math.max(1L, _))
-          .getOrElse(dflt)
-        val budget = confRows("spark.graft.m7e.groupSigRows", 12000000L)
-        // the 16-group cap bounds redundant plane-dot passes, but the
-        // sharding exists to bound per-group scratch DISK: when 16 groups
-        // would still exceed the measured disk-safe per-group row volume
-        // (~163M sig rows at 8 shards of the sf30 run, round 11), the
-        // cap yields to the disk bound instead of re-creating the
-        // one-shot spill failure at ~2× sf30 (r14 advice #1). Tunable
-        // via spark.graft.m7e.maxGroupSigRows.
-        val diskSafe = confRows("spark.graft.m7e.maxGroupSigRows", 160000000L)
-        val byVolume = (nVecs * nBands + budget - 1) / budget
-        val minForDisk = (nVecs * nBands + diskSafe - 1) / diskSafe
+        val byVolume = (nVecs * nBands + M7eGroupSigRows - 1) / M7eGroupSigRows
+        val minForDisk = (nVecs * nBands + M7eMaxGroupSigRows - 1) / M7eMaxGroupSigRows
         val capped = Seq(16L, nBands.toLong, byVolume).min
         // one band per group is the finest split: past it, a group's
         // signature rows (= nVecs) exceed the disk-safe bound regardless
         if (minForDisk > nBands)
           log.warn(
             s"m7e: $nVecs vectors need $minForDisk band groups to stay under " +
-              s"$diskSafe signature rows per group, but there are only $nBands bands; " +
+              s"$M7eMaxGroupSigRows signature rows per group, but there are only $nBands bands; " +
               s"clamped to $nBands groups of $nVecs rows each"
           )
         math.max(1L, math.min(nBands.toLong, math.max(capped, minForDisk))).toInt
@@ -605,22 +610,9 @@ object MultimodalOps {
       verifiedPairs(cand, emb)
         .write.mode(if (s == 0) "overwrite" else "append").parquet(out)
       // nudge the ContextCleaner: this group's shuffle files are
-      // unreachable once its job finished, but cleanup fires on GC.
-      // Gated on the group's SIGNATURE-ROW volume (vectors × bands in
-      // the group), the actual driver of per-group exchange bytes — a
-      // plain corpus-size gate missed that a sub-threshold corpus with
-      // a wide solved geometry re-creates the disk accumulation the gc
-      // exists to bound. Default 8M signature rows (the old 1M-vector
-      // gate at the typical ~8-band group); tunable for deployments
-      // whose executors spill earlier via spark.graft.m7e.gcSigRows.
-      // At driver-fixture scale the old always-on gc was 6 forced full
-      // GCs per bench run for shuffle files measured in megabytes.
-      val gcSigRows = spark.conf
-        .getOption("spark.graft.m7e.gcSigRows")
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .map(math.max(1L, _))
-        .getOrElse(8000000L)
-      if (nVecs * (hi - lo) > gcSigRows) System.gc()
+      // unreachable once its job finished, but cleanup fires on GC
+      // (gated on the group's signature-row volume, M7eGcSigRows).
+      if (nVecs * (hi - lo) > M7eGcSigRows) System.gc()
       s += 1
     }
     val res = Tables.parquet(spark, out).distinct().orderBy("id_a", "id_b")
@@ -634,9 +626,9 @@ object MultimodalOps {
       // The pin is cutLineage, not a bare localCheckpoint: once the
       // scratch is gone there is NO recompute path, so on a cluster an
       // executor losing localCheckpoint blocks would make the result
-      // permanently unrecoverable — with
-      // spark.graft.suffix.checkpointDir set (the cluster mode) the pin
-      // is a RELIABLE checkpoint instead (round-13 review finding #2).
+      // permanently unrecoverable — with a checkpoint directory set
+      // (spark.checkpoint.dir, the cluster mode) the pin is a RELIABLE
+      // checkpoint instead.
       val pinned = graft.operators.TextOps.cutLineage(res)
       val p = new org.apache.hadoop.fs.Path(out)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -794,34 +786,17 @@ object MultimodalOps {
     val emb = gramEmbeddings(docs).cache()
     try {
       val n = emb.count()
-      val nListsFit = math.min(256L, math.max(32L, n / 2000L)).toInt
+      val nLists = math.min(256L, math.max(32L, n / 2000L)).toInt
       val probes = 4
-      // round-11: when a persisted VectorIndexStore already exists for
-      // this corpus (spark.graft.m7d.store = its table name), the probe
-      // reads the STORED centroid table instead of refitting — the
-      // pre-flight then evaluates the exact layout the dedup would run
-      // against, and skips the fit that dominates its single-run cost.
-      // The refit path (conf unset) is the declared oracle query,
-      // unchanged; store-backed == refit agreement is spec-pinned when
-      // the store was built at the probe's own list count.
-      val stored = spark.conf
-        .getOption("spark.graft.m7d.store")
-        .filter(t => spark.catalog.tableExists(s"${t}_centroids"))
-        .map(t => graft.operators.IvfAnn.collectCents(spark.table(s"${t}_centroids")))
-      val nLists = stored.map(_.length).getOrElse(nListsFit)
-      val cents = stored.getOrElse(
-        // same persisted fit m7c probes (content-keyed, stored == fresh
-        // bits) — the pre-flight and the dedup read one store
-        graft.operators.IvfAnn.storedCentroids(
-          spark,
-          graft.operators.TextOps.documentsSnapshot(dir),
-          "gram-emb",
-          nListsFit
-        )(
-          graft.operators.IvfAnn
-            .centroids(emb.select(col("vec_id"), col("embedding")), nListsFit)
-        )
-      )
+      // same persisted fit m7c probes (content-keyed, stored == fresh
+      // bits) — the pre-flight and the dedup read one store, and a warm
+      // run skips the fit that dominates the probe's single-run cost
+      val cents = graft.operators.IvfAnn.storedCentroids(
+        spark,
+        graft.operators.TextOps.documentsSnapshot(dir),
+        "gram-emb",
+        nLists
+      )(graft.operators.IvfAnn.centroids(emb.select(col("vec_id"), col("embedding")), nLists))
       val probed = graft.operators.IvfAnn
         .withProbedCids(cents, "embedding", probes = probes)(emb)
 

@@ -3954,9 +3954,9 @@ object TextOps {
     * 2^rounds recompute of the deepest stages. With the cut, every round
     * reads the previous round's materialized table. The cut is
     * [[cutLineage]]: localCheckpoint on one box, a RELIABLE
-    * `checkpoint()` at the same boundaries when
-    * `spark.graft.suffix.checkpointDir` is set — the cluster mode, where
-    * executor loss must replay from the last round's table instead of
+    * `checkpoint()` at the same boundaries when the SparkContext has a
+    * checkpoint directory (`spark.checkpoint.dir`) — the cluster mode,
+    * where executor loss must replay from the last round's table instead of
     * killing the build (exactly like every published distributed
     * suffix-array build: pDC3 and friends materialize between rounds).
     * The table is memoized per (session, fixture content) so t65 and
@@ -4042,10 +4042,10 @@ object TextOps {
       // cut is cutLineage, NOT a bare localCheckpoint: localCheckpoint
       // blocks die with their executor and are NOT recomputable, so on
       // a cluster a lost node would fail every consumer instead of
-      // re-reading the store — when spark.graft.suffix.checkpointDir is
-      // set (the cluster mode) the cut is a RELIABLE checkpoint and
-      // executor loss replays from it (round-12 advice #2; the reliable
-      // copy duplicates the store's bytes under the checkpoint dir, an
+      // re-reading the store — with a checkpoint directory set
+      // (spark.checkpoint.dir, the cluster mode) the cut is a RELIABLE
+      // checkpoint and executor loss replays from it (the reliable copy
+      // duplicates the store's bytes under the checkpoint dir, an
       // accepted cost next to the hours-long build it protects)
       val built = cutLineage(suffixRankStore(s, words, cacheTag, spanL))
       suffixRankCache.update(
@@ -4162,25 +4162,18 @@ object TextOps {
   /** Lineage cut between doubling rounds. Default: `localCheckpoint` —
     * correct and cheap on one box, but its blocks live in executor
     * storage and die with an executor, so at cluster scale a lost node
-    * restarts the whole doubling chain. When
-    * `spark.graft.suffix.checkpointDir` is set, the SAME branch points
-    * write a RELIABLE `checkpoint()` under that directory instead (HDFS
-    * or object store on a real cluster): executor loss replays from the
-    * last round's materialized table — the between-rounds
-    * materialization every published distributed suffix-array build
-    * (pDC3 and friends) does. An already-configured SparkContext
-    * checkpoint dir is respected; otherwise the conf value is installed
-    * once. Reliable-mode overhead is measured in SCALING.md round 12. */
-  private[graft] def cutLineage(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    s.conf.getOption("spark.graft.suffix.checkpointDir").filter(_.nonEmpty) match {
-      case Some(dir) =>
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-  }
+    * restarts the whole doubling chain. When the SparkContext has a
+    * checkpoint directory (Spark's own `spark.checkpoint.dir`, applied at
+    * context start-up), the SAME branch points write a RELIABLE
+    * `checkpoint()` under it instead (HDFS or object store on a real
+    * cluster): executor loss replays from the last round's materialized
+    * table — the between-rounds materialization every published
+    * distributed suffix-array build (pDC3 and friends) does. The
+    * context's checkpoint directory is read, never set. Reliable-mode
+    * overhead is measured in SCALING.md round 12. */
+  private[graft] def cutLineage(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   private val suffixRankCache =
     scala.collection.concurrent.TrieMap

@@ -59,7 +59,29 @@ object VectorIndexStore {
       )
       .withColumn("qn", sqrt(call_function("graft_dot", col("qf"), col("qf"))))
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    indexed.write.partitionBy("cid").saveAsTable(table)
+    // the overwrite mode is a TABLE property: a later overwriting
+    // insertInto (purge, rebalance) rewrites only the cid partitions
+    // present in its data, without touching the session's conf
+    indexed.write
+      .partitionBy("cid")
+      .option(OverwriteModeKey, "dynamic")
+      .saveAsTable(table)
+  }
+
+  private val OverwriteModeKey = "partitionOverwriteMode"
+
+  /** The rewrite verbs ([[purge]], [[rebalance]]) overwrite only the cid
+    * lists present in their data, which holds for a table [[write]]
+    * created. Any other table would take a static overwrite that drops
+    * every other list, so they refuse it before writing anything. */
+  private def requireDynamicOverwrite(spark: SparkSession, table: String): Unit = {
+    val props = spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .storage.properties
+    require(
+      props.get(OverwriteModeKey).exists(_.equalsIgnoreCase("dynamic")),
+      s"$table has no $OverwriteModeKey=dynamic table property; build it with VectorIndexStore.write"
+    )
   }
 
   /** Probe the materialized index with a batch of (vec_id, embedding)
@@ -196,6 +218,7 @@ object VectorIndexStore {
     * deltas" explicit in every invocation. */
   def purge(spark: SparkSession, table: String, deltaDirs: Seq[String]): Unit = {
     if (!spark.catalog.tableExists(s"${table}_tombstones")) return
+    requireDynamicOverwrite(spark, table)
     val tomb = broadcast(spark.table(s"${table}_tombstones").select("vec_id").distinct())
     val base = spark.table(table)
     // ids still present in an un-compacted delta epoch keep their
@@ -246,21 +269,14 @@ object VectorIndexStore {
       val survivors = Tables.parquet(spark, staging.toString)
       val liveCids = survivors.select("cid").distinct().collect().map(_.getInt(0)).toSet
       // insertInto (NOT saveAsTable): saveAsTable-overwrite replaces the
-      // whole table; insertInto under dynamic partition overwrite rewrites
-      // only the partitions present in `survivors`. The catalog-table
-      // insert reads the SESSION conf, not the writer option (the writer
-      // option only reaches path-based writes) — set and restore it.
+      // whole table; insertInto under the table's dynamic partition
+      // overwrite rewrites only the partitions present in `survivors`.
       // Position-based, so align to the table's column order explicitly.
-      val pomKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevPom = spark.conf.get(pomKey, "STATIC")
-      spark.conf.set(pomKey, "dynamic")
-      try {
-        survivors
-          .select(spark.table(table).columns.toIndexedSeq.map(col): _*)
-          .write
-          .mode("overwrite")
-          .insertInto(table)
-      } finally spark.conf.set(pomKey, prevPom)
+      survivors
+        .select(spark.table(table).columns.toIndexedSeq.map(col): _*)
+        .write
+        .mode("overwrite")
+        .insertInto(table)
       sfs.delete(staging, true)
       touchedCids.filterNot(liveCids).foreach { c =>
         spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (cid=$c)")
@@ -616,6 +632,7 @@ object VectorIndexStore {
       table: String,
       maxListFactor: Double = 4.0
   ): Seq[(Int, Int)] = {
+    requireDynamicOverwrite(spark, table)
     val done = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
     val degenerate = scala.collection.mutable.Set.empty[Int]
     var pass = 0
@@ -779,15 +796,10 @@ object VectorIndexStore {
         .write
         .mode("overwrite")
         .parquet(staging.toString)
-      val pomKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevPom = spark.conf.get(pomKey, "STATIC")
-      spark.conf.set(pomKey, "dynamic")
-      try {
-        Tables.parquet(spark, staging.toString)
-          .write
-          .mode("overwrite")
-          .insertInto(table)
-      } finally spark.conf.set(pomKey, prevPom)
+      Tables.parquet(spark, staging.toString)
+        .write
+        .mode("overwrite")
+        .insertInto(table)
       sfs.delete(staging, true)
       viable.map(c => c -> newCidOf(c)).toSeq
       // unpersist in finally, not on the happy path: a failed maintenance

@@ -23,8 +23,6 @@ object VectorOps {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Brute-force cosine top-k: queries (vec_id < 10) × all candidates,
     * double-precision cosine, k=5, deterministic tie-break on neighbor id.
     * Output is (query_id, rnk, neighbor_id) — rank only, so cross-engine
@@ -932,13 +930,10 @@ object VectorOps {
     * is what survives semantic deduplication. Reuses
     * [[GraphOps.connectedComponents]] (state = pair members only).
     *
-    * The pair stage is selectable: `spark.graft.v12.banded=true` swaps the
-    * exact all-pairs scan for [[cosinePairsBanded]] — the scale path whose
-    * output is equality-gated against the exact criterion in LshRecallSpec
-    * (verification is exact, so banded ⊆ exact always). The exact stage
-    * stays the default at bench scale because this corpus's τ=0.45 sits
+    * The pair stage is the exact all-pairs scan: this corpus's τ=0.45 sits
     * near the random-pair background where banding can't prune (see
-    * [[cosinePairsBanded]]); the clustering stage is identical either way. */
+    * [[cosinePairsBanded]], whose pair set LshRecallSpec gates equal to the
+    * exact one at this τ). The banded scale path is v12b/v12c. */
   // NOTE on .cache() inside declared queries that RETURN lazy frames
   // (v12 family, v4, v22, v37's tf base): the builder cannot unpersist
   // what the caller has not yet executed. Freed by session clearCache
@@ -952,11 +947,7 @@ object VectorOps {
   private def v12SemanticClusters(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
-    val banded = s.conf.getOption("spark.graft.v12.banded").exists(_.toBoolean)
-    val pairs =
-      if (banded) cosinePairsBanded(emb, 0.45)
-      else cosinePairsExact(emb, 0.45)
-    val edges = GraphOps.bidirectional(pairs, "id_a", "id_b").cache()
+    val edges = GraphOps.bidirectional(cosinePairsExact(emb, 0.45), "id_a", "id_b").cache()
     val labels = GraphOps.connectedComponents(edges).withColumnRenamed("id", "vec_id")
     val w = Window.partitionBy("cluster_id")
     emb
@@ -990,30 +981,12 @@ object VectorOps {
     * oracle rebuilds the 128-plane table as SQL literals (v3's scheme). */
   private def v12bSemanticClustersBanded(s: SparkSession, d: String): DataFrame = {
     GraftFunctions.register(s)
-    val emb = Tables.embeddings(s, d)
     // Band geometry is THE scale knob (SCALING.md): background (uncorrelated)
     // pairs collide with constant probability ≈ nBands·2^-bandBits, so with
     // fixed geometry the candidate count grows quadratically in corpus size.
-    // Holding recall fixed, the rule is bandBits ∝ log n with nBands raised
-    // to compensate (e.g. 16×8 → 32×12 cuts background collisions ~8× while
-    // keeping the true-pair miss rate at τ=0.9 under 1%). Defaults stay
-    // 16×8 — the geometry baked into the DuckDB oracle's plane literals.
-    // spark.graft.v12b.auto=true derives the geometry from the corpus count
-    // via [[bandGeometry]] (one count() — a planning-time scalar, the same
-    // class of action as IVF's centroid collect); explicit bands/bandBits
-    // confs override; defaults stay the oracle's 16×8.
-    // precedence matches the contract above: explicit confs PIN a
-    // geometry even when auto is on (the repro/debug case), auto solves
-    // when nothing is pinned, defaults are the oracle's literals
-    val explicitBands = s.conf.getOption("spark.graft.v12b.bands").map(_.toInt)
-    val explicitBits = s.conf.getOption("spark.graft.v12b.bandBits").map(_.toInt)
-    val (nBands, bandBits) =
-      if ((explicitBands.isEmpty || explicitBits.isEmpty) &&
-          s.conf.getOption("spark.graft.v12b.auto").exists(_.toBoolean)) {
-        val (ab, abb) = bandGeometry(emb.count(), 0.9)
-        (explicitBands.getOrElse(ab), explicitBits.getOrElse(abb))
-      } else (explicitBands.getOrElse(16), explicitBits.getOrElse(8))
-    semanticClustersBandedAt(emb, nBands, bandBits)
+    // v12b stays at 16×8 — the geometry baked into the DuckDB oracle's plane
+    // literals; v12c runs the geometry solved from the corpus count.
+    semanticClustersBandedAt(Tables.embeddings(s, d), nBands = 16, bandBits = 8)
   }
 
   /** v12b's post-geometry body — banded candidates, per-vector degree,
@@ -1046,9 +1019,9 @@ object VectorOps {
       .orderBy("vec_id")
   }
 
-  /** v12c — v12b under the AUTO-SOLVED band geometry: what
-    * `spark.graft.v12b.auto=true` runs, declared as its own query so the
-    * solver's pick (not the hand-baked 16×8) is itself hash-certified.
+  /** v12c — v12b under the AUTO-SOLVED band geometry, declared as its own
+    * query so the solver's pick (not the hand-baked 16×8) is itself
+    * hash-certified.
     * Geometry = [[bandGeometry]](corpus count, τ=0.9) — one planning-time
     * count(); the DuckDB oracle re-runs the SAME solver arithmetic in SQL
     * over count(*) and draws its planes from a literal table sized for the
@@ -1120,10 +1093,10 @@ object VectorOps {
     * never fan the join out quadratically — exactly the terms whose
     * idf < ln 2 contributes nothing to the ranking anyway. The cap is
     * RELATIVE (df/N), so it needs no retuning as the corpus grows, and the
-    * dropped-term count is surfaced (logged, t6's convention), never
-    * silent. The query side of the term join is broadcast — query term
-    * lists are bounded by construction, so the corpus-side posting list
-    * streams without a shuffle. */
+    * dropped-term count is surfaced as the declared query
+    * `v14b_rrf_dropped_terms`, never silent. The query side of the term
+    * join is broadcast — query term lists are bounded by construction, so
+    * the corpus-side posting list streams without a shuffle. */
   /** v14's per-document term frequencies and its df-annotated dictionary
     * (each term with its document frequency and the corpus size) — shared
     * by the retrieval query and the drop-count observability query so the
@@ -1159,19 +1132,6 @@ object VectorOps {
     GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val (tf, dftN) = termTfAndDict(docs)
-    // Drop-count observability is config-gated HERE (the .first() is an
-    // EAGER Spark job over the tokenize→tf→df pipeline, and running it at
-    // DataFrame-construction time made every plan inspection / bench
-    // construction of v14 pay the pipeline twice); the always-available
-    // form is the declared v14b_rrf_dropped_terms query. The cap itself is
-    // always on; flip spark.graft.v14.logDrops to audit inline.
-    if (s.conf.getOption("spark.graft.v14.logDrops").exists(_.toBoolean)) {
-      val droppedTerms = v14DroppedTerms(docs).first()
-      logger.warn(
-        s"v14 hot-term cap df<=N/2 dropped ${droppedTerms.getLong(0)} terms " +
-          s"(${droppedTerms.getLong(1)} postings)"
-      )
-    }
     val weighted = tf
       .join(dftN.filter(col("df") <= expr("n_docs DIV 2")), "term")
       .withColumn("idf6", round(log(col("n_docs") / col("df")) * 1e6).cast("long"))
@@ -1344,10 +1304,9 @@ object VectorOps {
     GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     // spark.graft.ivf.auto=true sizes the list count from the corpus count
-    // (one planning-time count(), v12b.auto's convention); explicit
-    // spark.graft.ivf.lists overrides; default stays the oracle's 16.
-    // explicit spark.graft.ivf.lists PINS the count even when auto is on
-    // (matching the v12b precedence); auto solves otherwise
+    // (one planning-time count(), v12c's convention); an explicit
+    // spark.graft.ivf.lists PINS the count even when auto is on; default
+    // stays the oracle's 16.
     val nLists = s.conf
       .getOption("spark.graft.ivf.lists")
       .map(_.toInt)

@@ -94,18 +94,20 @@ object Tables {
   /** `events.ts` has shipped in two physical shapes across driver testdata
     * generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized reader
     * rejects — read as a raw nanosecond long via
-    * `spark.sql.legacy.parquet.nanosAsLong` and floor-divide to micros;
-    * `div`, not `/`, because epoch-nanos ~1.7e18 exceed double's 53-bit
-    * mantissa) and plain timestamp[us] without timezone (read as
-    * TIMESTAMP_NTZ). Normalize BOTH to TimestampType: all sessions here run
-    * with `spark.sql.session.timeZone=UTC`, so the NTZ wall clock maps to
-    * the same epoch micros DuckDB's `epoch_us(ts)` reports — the oracle
-    * contract every events query depends on.
+    * `spark.sql.legacy.parquet.nanosAsLong`, which [[graft.GraftSession]]'s
+    * recipe sets, and floor-divide to micros; `div`, not `/`, because
+    * epoch-nanos ~1.7e18 exceed double's 53-bit mantissa) and plain
+    * timestamp[us] without timezone (read as TIMESTAMP_NTZ). Normalize BOTH
+    * to TimestampType: all sessions here run with
+    * `spark.sql.session.timeZone=UTC`, so the NTZ wall clock maps to the
+    * same epoch micros DuckDB's `epoch_us(ts)` reports — the oracle
+    * contract every events query depends on. The caller's session is read,
+    * never changed: a session without `nanosAsLong` gets Spark's own
+    * illegal-Parquet-type error on the NANOS shape.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>

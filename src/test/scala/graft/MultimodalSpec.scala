@@ -261,33 +261,6 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("m7d reads persisted store centroids when configured, agreeing with the refit probe") {
-    // round-11: with spark.graft.m7d.store naming a VectorIndexStore,
-    // the probe reads the stored centroid table instead of refitting.
-    // Built at the probe's own list count on the same corpus, the two
-    // paths must agree exactly (the fit is deterministic); a configured
-    // but ABSENT store must fall back to refit, not fail.
-    import graft.multimodal.MultimodalOps
-    val sf = "/root/testdata/sf0.001"
-    val emb = MultimodalOps
-      .gramEmbeddings(spark.read.parquet(s"$sf/documents.parquet"))
-      .select("vec_id", "embedding")
-    val nLists = math.min(256L, math.max(32L, emb.count() / 2000L)).toInt
-    graft.operators.VectorIndexStore.write(emb, "m7d_spec_store", nLists)
-    val refit = MultimodalOps.ivfProbeDecisionQuery(spark, sf).collect().toSeq
-    spark.conf.set("spark.graft.m7d.store", "m7d_spec_store")
-    val storeBacked =
-      try MultimodalOps.ivfProbeDecisionQuery(spark, sf).collect().toSeq
-      finally spark.conf.unset("spark.graft.m7d.store")
-    assert(storeBacked == refit,
-      s"store-backed probe diverged:\n$storeBacked\nvs refit\n$refit")
-    spark.conf.set("spark.graft.m7d.store", "m7d_no_such_store")
-    val fallback =
-      try MultimodalOps.ivfProbeDecisionQuery(spark, sf).collect().toSeq
-      finally spark.conf.unset("spark.graft.m7d.store")
-    assert(fallback == refit, "absent store must fall back to the refit path")
-  }
-
   test("m7b plan has no all-pairs stage (no cartesian/broadcast-NL join)") {
     val plan = graft.multimodal.MultimodalOps
       .semanticDedupBandedQuery(spark, "/root/testdata/sf0.001")

@@ -32,15 +32,54 @@ class ParquetReaderSpec extends AnyFunSuite {
     }
   }
 
+  /** An `events.parquet` whose `ts` is TIMESTAMP(NANOS), the shape older
+    * testdata generations shipped, written with parquet-hadoop directly
+    * (Spark writes no NANOS timestamps). Returns the fixture directory. */
+  private def writeNanosEvents(nanos: Seq[Long]): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64)
+      .as(LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.NANOS))
+      .named("ts")
+      .named("events")
+    val dir = Files.createTempDirectory("graft-nanos").toString
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withConf(new org.apache.hadoop.conf.Configuration())
+      .withType(schema)
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", ns))
+    } finally writer.close()
+    dir
+  }
+
   test("every testdata table reads with Spark's schema and no Spark job") {
     val dir = Paths.get("/root/testdata/sf0.001")
     val tables = Files.list(dir).iterator().asScala.map(_.toString).toSeq.sorted
     assert(tables.size >= 10)
     tables.foreach(assertReadsLikeSpark(_))
-    Seq("true", "false").foreach { nanos =>
-      assertReadsLikeSpark(s"$dir/events.parquet",
-        Map("spark.sql.legacy.parquet.nanosAsLong" -> nanos))
-    }
+    val nanosEvents = s"${writeNanosEvents(Seq(1704067200123456789L))}/events.parquet"
+    for (file <- Seq(s"$dir/events.parquet", nanosEvents); nanos <- Seq("true", "false"))
+      assertReadsLikeSpark(file, Map("spark.sql.legacy.parquet.nanosAsLong" -> nanos))
+  }
+
+  test("Tables.events reads TIMESTAMP(NANOS) under the recipe without changing the session") {
+    // the recipe reads NANOS as a long; events floors it to micros
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val nanos = Seq(1704067200123456789L, 1704153600000000999L, 1706745599999999000L)
+    val dir = writeNanosEvents(nanos)
+    val before = spark.conf.getAll
+    val events = Tables.events(spark, dir)
+    assert(events.schema("ts").dataType == TimestampType)
+    val micros = events.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0))
+    assert(micros.toSeq == nanos.map(_ / 1000))
+    assert(spark.conf.getAll == before)
   }
 
   test("Spark-written nested, partitioned and empty tables read like spark.read.parquet") {
@@ -71,6 +110,21 @@ class ParquetReaderSpec extends AnyFunSuite {
       Seq(LongType, DateType, IntegerType))
     assert(Tables.parquet(spark, s"$tmp/nested").orderBy("id").collect().toSeq ==
       spark.read.parquet(s"$tmp/nested").orderBy("id").collect().toSeq)
+  }
+
+  test("src/main sets no session conf or checkpoint dir, and reads only the two IVF confs") {
+    val write = """\.conf\.(set|unset)\(|setCheckpointDir\(""".r
+    val graftConf = """spark\.graft\.[A-Za-z0-9.]+""".r
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p))
+      .toSeq
+    val writes = sources.flatMap { case (f, text) =>
+      text.linesIterator.filter(write.findFirstIn(_).nonEmpty).map(l => s"$f: ${l.trim}")
+    }
+    assert(writes.isEmpty, s"session writes:\n${writes.mkString("\n")}")
+    val confs = sources.flatMap { case (_, text) => graftConf.findAllIn(text) }.toSet
+    assert(confs == Set("spark.graft.ivf.auto", "spark.graft.ivf.lists"))
   }
 
   test("spark.read.parquet appears in src/main only inside the reader") {

@@ -27,7 +27,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // label cost 2 md5s per probed candidate that way (2× the query)
     // until it was moved to ride the shingle generator.
     val (cartesian, hashJoins) = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val p = plan(name)
+      // each builder's .cache() calls would otherwise pile up across the
+      // sweep and re-ask to cache plans already cached (Verify's hygiene)
+      val p = try plan(name) finally spark.catalog.clearCache()
       val cart = if (p.contains("CartesianProduct")) Some(name) else None
       val hash = p.linesIterator
         .filter(_.contains("Join"))

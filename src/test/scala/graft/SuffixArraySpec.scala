@@ -393,12 +393,12 @@ class SuffixArraySpec extends AnyFunSuite {
   }
 
   test("reliable checkpoint mode writes round tables to the conf'd dir, same verdicts") {
-    // spark.graft.suffix.checkpointDir swaps localCheckpoint for a
-    // reliable checkpoint() at the SAME branch points — the cluster
-    // durability mode. Same corpus bytes in a second fixture dir (cache
-    // keys carry the content snapshot, so this forces a fresh build
-    // under the conf), identical t65 rows out, and the checkpoint dir
-    // must actually hold RDD files.
+    // a SparkContext checkpoint directory (spark.checkpoint.dir on a
+    // cluster) swaps localCheckpoint for a reliable checkpoint() at the
+    // SAME branch points — the cluster durability mode. Same corpus bytes
+    // in a second fixture dir (cache keys carry the content snapshot, so
+    // this forces a fresh build in that mode), identical t65 rows out,
+    // and the checkpoint dir must actually hold RDD files.
     val s16 = (1 to 20).map(i => s"s$i")
     val rows = Seq(
       0L -> ((1 to 4).map(i => s"p$i") ++ s16).mkString(" "),
@@ -414,7 +414,7 @@ class SuffixArraySpec extends AnyFunSuite {
       .toSeq
     val ck = java.nio.file.Files.createTempDirectory("graft-suffix-ck").toString
     try {
-      spark.conf.set("spark.graft.suffix.checkpointDir", ck)
+      spark.sparkContext.setCheckpointDir(ck)
       val got = TextOps
         .queries("t65_suffix_ranks")(spark, dirB)
         .collect()
@@ -425,7 +425,7 @@ class SuffixArraySpec extends AnyFunSuite {
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files) else Seq(f)
       assert(files(new java.io.File(ck)).nonEmpty,
         "reliable mode set but no checkpoint files were written")
-    } finally spark.conf.unset("spark.graft.suffix.checkpointDir")
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("orderIds assigns order-consistent unique ids ≥ 1 without a global window") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.operators.{IvfAnn, VectorIndexStore}
 import graft.sources.Tables
 
@@ -467,6 +468,74 @@ class VectorIndexSinkSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS ivf_rbd_t")
       spark.sql("DROP TABLE IF EXISTS ivf_rbd_t_tombstones")
+    }
+  }
+
+  test("purge and rebalance leave the session conf alone and the untouched lists' rows in place") {
+    // both verbs overwrite through the table's own dynamic overwrite mode,
+    // never the session's; every list a verb does not rewrite keeps its rows
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val seed = emb.orderBy("vec_id").select("embedding").head.getSeq[Float](0)
+    val jittered = (0 until 300).map { i =>
+      (400000L + i, seed.toArray.clone().updated(0, seed(0) + i * 0.001f).toSeq)
+    }.toDF("vec_id", "embedding").withColumn("embedding", col("embedding").cast("array<float>"))
+    VectorIndexStore.write(emb.unionByName(jittered), "ivf_conf_t")
+    def lists(): Map[Int, Set[Long]] = spark.table("ivf_conf_t").select("cid", "vec_id")
+      .collect().groupBy(_.getInt(0)).map { case (c, rs) => c -> rs.map(_.getLong(1)).toSet }
+    try {
+      val conf = spark.conf.getAll
+      // a verb must leave the conf as it found it, and must not change it
+      // while it runs either: each job carries the SQL confs it ran under
+      def runsUnderCallersConf(verb: String)(body: => Unit): Unit = {
+        val jobs = TestSpark.jobStarts(body)
+        assert(jobs.nonEmpty)
+        jobs.foreach { j =>
+          val sqlConfs = Option(j.properties).map(_.asScala.toMap).getOrElse(Map.empty)
+            .filter { case (k, _) => k.startsWith("spark.sql.") && !k.startsWith("spark.sql.execution.") }
+          assert(sqlConfs.toSet.subsetOf(conf.toSet),
+            s"$verb ran a job under ${sqlConfs.toSet -- conf.toSet}")
+        }
+        assert(spark.conf.getAll == conf, s"$verb changed the session conf")
+      }
+      val before = lists()
+      val victim = before.toSeq.sortBy(_._1).head
+      VectorIndexStore.delete(spark, "ivf_conf_t", Seq(victim._2.min).toDF("vec_id"))
+      runsUnderCallersConf("purge")(VectorIndexStore.purge(spark, "ivf_conf_t", Seq.empty))
+      val purged = lists()
+      assert(purged - victim._1 == before - victim._1, "purge moved rows of untouched lists")
+      assert(purged(victim._1) == victim._2 - victim._2.min)
+      var splits = Seq.empty[(Int, Int)]
+      runsUnderCallersConf("rebalance") {
+        splits = VectorIndexStore.rebalance(spark, "ivf_conf_t", maxListFactor = 4.0)
+      }
+      assert(splits.nonEmpty, "the skewed fixture must trigger a split")
+      val moved = splits.flatMap { case (o, n) => Seq(o, n) }.toSet
+      assert(lists().filter(l => !moved(l._1)) == purged.filter(l => !moved(l._1)),
+        "rebalance moved rows of lists it did not split")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS ivf_conf_t")
+      spark.sql("DROP TABLE IF EXISTS ivf_conf_t_tombstones")
+      spark.sql("DROP TABLE IF EXISTS ivf_conf_t_centroids")
+    }
+  }
+
+  test("purge and rebalance refuse an index table without dynamic overwrite") {
+    // a static overwrite would drop every list the verb does not rewrite
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sf)
+    VectorIndexStore.write(emb, "ivf_src_t")
+    try {
+      spark.table("ivf_src_t").write.partitionBy("cid").saveAsTable("ivf_static_t")
+      VectorIndexStore.delete(spark, "ivf_static_t", Seq(0L).toDF("vec_id"))
+      val rows = spark.table("ivf_static_t").count()
+      intercept[IllegalArgumentException](VectorIndexStore.purge(spark, "ivf_static_t", Seq.empty))
+      intercept[IllegalArgumentException](VectorIndexStore.rebalance(spark, "ivf_static_t"))
+      assert(spark.table("ivf_static_t").count() == rows)
+    } finally {
+      Seq("ivf_src_t", "ivf_src_t_centroids", "ivf_static_t", "ivf_static_t_tombstones")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 

@@ -56,7 +56,8 @@ class VerifyContractSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val sf = "/root/testdata/sf0.001"
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
-      decimalPaths(q(spark, sf).schema, name)
+      try decimalPaths(q(spark, sf).schema, name)
+      finally spark.catalog.clearCache() // as Verify does between queries
     }
     assert(offenders.isEmpty, s"DecimalType output columns (driver hash-red risk): $offenders")
   }
